@@ -82,7 +82,7 @@ def main() -> None:
     job = clk("init_compile", lambda: ResolutionJob(spark, docs, model))
 
     # --- materialization, level by level (mirrors materialize(None)) ---
-    clk("mat_base", lambda: job.materialize(job._base_levels()))
+    clk("mat_base", lambda: job.materialize(job.BASE_LEVELS))
     clk("skew_policy", job._compute_skew_policy)
     ck = job._ck_level()
     if ck:

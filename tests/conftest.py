@@ -34,6 +34,11 @@ DOCS_SCHEMA = T.StructType([
 ])
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: long-running test (deselect with -m 'not slow')")
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark(master=os.environ.get("ZENTITY_TEST_MASTER", "local[4]"),

@@ -180,3 +180,28 @@ def test_cap_recall_interaction_on_hot_fuzzy_block(spark):
         assert labels[f"a-{i:06d}"] == f"a-{i:06d}"
     for i in range(cap):
         assert labels[f"a-{i:06d}"] == "a-000000"
+
+
+def test_skew_statistic_persisted_in_stage_dir(spark, tmp_path):
+    """the keys aggregate behind the policy runs once per stage dir: a
+    later job opening the dir reads the persisted statistic (a planted
+    value proves it is read, not recomputed), and each plan still derives
+    its policy from its own hot threshold."""
+    import json
+    import os
+    base = str(tmp_path / "stages")
+    job = _job(spark, salt_min=16).cache_stages_under(base)
+    job.materialize()
+    path = os.path.join(job._ckpt_dir, "key_blocks.json")
+    with open(path) as f:
+        assert json.load(f) == {"acct": N_HOT}
+    with open(path, "w") as f:
+        json.dump({"acct": 1}, f)
+    cold = _job(spark, salt_min=16).cache_stages_under(base)
+    cold.materialize()
+    assert cold.plan.skew_policy == {"r": False}
+    with open(path, "w") as f:
+        json.dump({"acct": N_HOT}, f)
+    high = _job(spark, salt_min=100000).cache_stages_under(base)
+    high.materialize()
+    assert high.plan.skew_policy == {"r": False}

@@ -71,6 +71,18 @@ def _id_stats(df: DataFrame, col: str = "doc_id"):
     return int(r["n"]), float(r["w"] if r["w"] is not None else 8.0)
 
 
+def _checkpoint_id_stats(df: DataFrame, col: str = "doc_id"):
+    """(localCheckpoint of df, row count, avg id byte width): the stats
+    ride on the checkpoint job itself via an Observation — no second job
+    over the relation."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"),
+                    F.avg(F.length(col)).alias("w")).localCheckpoint()
+    r = obs.get
+    return df, int(r["n"]), float(r["w"] if r["w"] is not None else 8.0)
+
+
 def _rebind(df: DataFrame, session) -> DataFrame:
     """re-root a LOCALLY CHECKPOINTED DataFrame into another session of the
     same SparkContext via a (transient) global temp view: the resolved plan
@@ -280,11 +292,14 @@ def bounded_label_propagation(edges: DataFrame, seeds: DataFrame,
          .localCheckpoint())
     nbr = e.select("u", "v", "q").union(
         e.select(F.col("v").alias("u"), F.col("u").alias("v"), "q"))
-    reached = (seeds.select("doc_id").distinct()
-               .withColumn("hop", F.lit(0))
-               .withColumn("q", F.lit(0)).localCheckpoint())
+    # each hop runs ONE job: the frontier checkpoint, whose Observation
+    # carries the (rows, id width) the next hop's broadcast gate needs;
+    # reached stays a union of checkpointed frontiers (tiny leaves)
+    reached, n_frontier, id_w = _checkpoint_id_stats(
+        seeds.select("doc_id").distinct()
+        .withColumn("hop", F.lit(0))
+        .withColumn("q", F.lit(0)))
     frontier = reached
-    n_frontier, id_w = _id_stats(reached)
     for h in range(1, max_hops + 1):
         if max_time_s is not None and _t.time() - t0 > max_time_s:
             break
@@ -308,10 +323,9 @@ def bounded_label_propagation(edges: DataFrame, seeds: DataFrame,
         if _PLAN_AUDIT:
             _LAST_HOP_PLANS.append(
                 nxt._jdf.queryExecution().executedPlan().toString())
-        nxt = nxt.localCheckpoint()
-        n_frontier, id_w = _id_stats(nxt)
+        nxt, n_frontier, id_w = _checkpoint_id_stats(nxt)
         if n_frontier == 0:
             break
-        reached = reached.union(nxt).localCheckpoint()
+        reached = reached.union(nxt)
         frontier = nxt
     return reached

@@ -267,7 +267,11 @@ class IncrementalResolver:
         job = ResolutionJob(self.spark, docs, self.model, self.scope,
                             self.block_cap)
         self._write_stage_rows(job, fold_id)
-        edges = job.match_edges()
+        # the compiled edge plan, not match_edges(): the fold never reads
+        # explanations, so it skips writing the edge-and-explanation stage
+        edges = job.stage(
+            "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
+            upto="match_edges_x")
         self.storage.write(edges, self._part("edges", fold_id))
         job.unpersist()
         edges = self.storage.read(self._path("edges"))

@@ -77,26 +77,24 @@ class ResolutionJob:
     # cold anti-join, hot semi-join — materializing avoids recomputing the
     # key joins per reference).  vals_x stays a CTE (only attributes_map
     # reads it — a separate materialization is a wasted barrier).
-    def _base_levels(self):
-        if os.environ.get("ZENTITY_MAT_ATTRS", "1") == "1":
-            return (("attrs_x",), ("keys_x", "vals_wide_x"))
-        # A/B: skip the attrs barrier — keys/vals_wide recompute the
-        # (cheap) extract inline, one less sequential level
-        return (("keys_x", "vals_wide_x"),)
+    BASE_LEVELS = (("attrs_x",), ("keys_x", "vals_wide_x"))
+
+    # the verified edges WITH the explanation rows they carry: one row per
+    # matched (pair, resolver, attribute, field, matcher) binding.  Every
+    # edge has at least one matched binding per resolver attribute, so the
+    # distinct (pair, resolver) projection IS the match-edge set — edges,
+    # scores and explanations all read this one stage.  Written by the
+    # first reader (_edge_stage), never by the default levels: neither a
+    # stage-cache warm nor the fold's Δ-local job reads edges.
+    EDGE_STAGE = "explain_x"
 
     def _ck_level(self):
         # only resolvers whose pair plan keeps the skew machinery
         # reference their ck 3× (stats/anti/semi) and benefit from
         # materialization; skew-free resolvers reference ck once
-        if os.environ.get("ZENTITY_MAT_CK", "1") != "1":
-            return ()
         return tuple(f"ck_{r.name}"
                      for r in self.plan.active_resolvers()
                      if self.plan.resolver_needs_skew(r))
-
-    def mat_stages(self):
-        ck = self._ck_level()
-        return self._base_levels() + ((ck,) if ck else ())
 
     def _compute_skew_policy(self) -> None:
         """fill plan.skew_policy from the materialized keys stage: ONE
@@ -107,15 +105,35 @@ class ResolutionJob:
         hot threshold compile to plain self-joins (no window, no hot
         stats, no salting).  The collect is a ≤#attributes-row plan-time
         statistic, the same adaptive-planning category as AQE's runtime
-        stats."""
+        stats.
+
+        The statistic is a pure function of keys_x, so a job with a stage
+        dir persists it beside ``fingerprint.txt`` (``key_blocks.json``)
+        and later jobs opening the dir read it back instead of re-running
+        the aggregate; the policy is re-derived against each plan's own
+        hot threshold."""
+        import json
         if self.plan.skew_policy is not None:
             return
-        rows = self.stage(
-            "SELECT attr, max(c) AS mx FROM ("
-            "SELECT attr, key, count(*) AS c FROM keys_x "
-            "GROUP BY attr, key) GROUP BY attr",
-            upto="keys_x").collect()
-        mx = {r["attr"]: r["mx"] for r in rows}
+        path = (os.path.join(self._ckpt_dir, "key_blocks.json")
+                if self._ckpt_dir is not None else None)
+        if path is not None and os.path.exists(path):
+            with open(path) as f:
+                mx = json.load(f)
+        else:
+            rows = self.stage(
+                "SELECT attr, max(c) AS mx FROM ("
+                "SELECT attr, key, count(*) AS c FROM keys_x "
+                "GROUP BY attr, key) GROUP BY attr",
+                upto="keys_x").collect()
+            mx = {r["attr"]: r["mx"] for r in rows}
+            if path is not None:
+                # write-aside + rename: a concurrent job sharing the dir
+                # never reads a half-written file
+                tmp = f"{path}.{uuid.uuid4().hex[:8]}"
+                with open(tmp, "w") as f:
+                    json.dump(mx, f)
+                os.replace(tmp, path)
         thr = self.plan.hot_threshold
         self.plan.skew_policy = {
             r.name: min((mx.get(a, 0) for a in r.attributes), default=0) > thr
@@ -135,30 +153,14 @@ class ResolutionJob:
         materialization the resume/lineage design wants (SURVEY §5.3).
         """
         import threading
-        import time as _t
         if stages is None:
             # base stages first; the keys statistics then decide which
             # resolvers keep the skew machinery (and need ck materialized)
-            self.materialize(self._base_levels())
+            self.materialize(self.BASE_LEVELS)
             self._compute_skew_policy()
             ck = self._ck_level()
             if ck:
                 self.materialize((ck,))
-            return
-        # ZENTITY_MAT=ckpt: materialize via localCheckpoint + temp views
-        # (in-memory partitions, no parquet encode/decode round-trip).
-        # Off by default: parquet is the resumable/lineage path, and temp
-        # views are per-session state.  Used by bench.py for the
-        # fixed-cost A/B (BENCH/BASELINE.md round-2 notes).
-        if os.environ.get("ZENTITY_MAT", "parquet") == "ckpt":
-            for level in stages:
-                todo = [st for st in level if st not in self._replace]
-                dfs = [(st, self.stage(f"SELECT * FROM {st}", upto=st))
-                       for st in todo]
-                for st, df in dfs:
-                    view = f"{self._view}_{st}"
-                    df.localCheckpoint().createOrReplaceTempView(view)
-                    self._replace[st] = view
             return
         if self._ckpt_dir is None:
             # same safe-scratch base as spark.local.dir (session.py): the
@@ -177,27 +179,13 @@ class ResolutionJob:
             # pre-render every stage's SQL BEFORE starting threads: worker
             # threads must not call stage() (which reads self._replace)
             # while the level's fast-path updates land
-            jobs = []
-            for st in todo:
-                path = os.path.join(self._ckpt_dir, st)
-                if not self.storage.complete(path):
-                    jobs.append((st, path,
-                                 self.stage(f"SELECT * FROM {st}", upto=st)))
-
-            def run_one(st: str, path: str, df: DataFrame) -> None:
-                from pyspark.sql import Observation
-                t0 = _t.time()
-                # Observation: row count piggybacks on the write job — no
-                # post-write re-read pass for lineage metrics
-                obs = Observation()
-                self.storage.write(
-                    df.observe(obs, F.count(F.lit(1)).alias("n")), path)
-                self._metric(st, obs.get["n"], (_t.time() - t0) * 1000)
-
+            jobs = [(st, self.stage(f"SELECT * FROM {st}", upto=st))
+                    for st in todo if not self.storage.complete(
+                        os.path.join(self._ckpt_dir, st))]
             if len(jobs) == 1:
-                run_one(*jobs[0])
+                self._write_stage(*jobs[0])
             elif jobs:
-                threads = [threading.Thread(target=run_one, args=j)
+                threads = [threading.Thread(target=self._write_stage, args=j)
                            for j in jobs]
                 for t in threads:
                     t.start()
@@ -207,13 +195,24 @@ class ResolutionJob:
                 path = os.path.join(self._ckpt_dir, st)
                 self._replace[st] = self.storage.scan_sql(path)
 
+    def _edge_stage(self) -> None:
+        """materialize ``EDGE_STAGE`` on top of the default levels — the
+        first reader writes it, every later reader (this job or any job
+        opening the same stage dir) only substitutes the scan."""
+        self.materialize()
+        self.materialize(((self.EDGE_STAGE,),))
+
     def cache_stages_under(self, base: str) -> "ResolutionJob":
         """share materialized stages across jobs: the checkpoint dir becomes
         ``base/<fingerprint>``, so any job with the same (model, scope,
         block_cap, input files) reuses already-written stage parquet
         (idempotent via per-stage _SUCCESS markers) instead of re-deriving
-        it into a fresh mkdtemp.  The dir is NOT owned (never auto-deleted
-        by unpersist) — callers manage ``base``'s lifetime."""
+        it into a fresh mkdtemp.  Besides the default levels and the
+        persisted skew statistic, the dir holds the edge-and-explanation
+        stage (``EDGE_STAGE``), written by the first job that reads
+        edges, scores or explanations — later jobs run no pair or verify
+        plan.  The dir is NOT owned (never auto-deleted by unpersist) —
+        callers manage ``base``'s lifetime."""
         os.makedirs(base, exist_ok=True)
         self._ckpt_dir = os.path.join(base, self.fingerprint())
         self._owns_ckpt_dir = False
@@ -260,28 +259,31 @@ class ResolutionJob:
 
     # ---------- checkpointed execution (SURVEY §5.3 resume/lineage, M7) ----------
 
-    def _metric(self, stage: str, rows: int, wall_ms: float) -> None:
+    def _write_stage(self, name: str, df: DataFrame) -> None:
+        """write one stage under the stage dir and append its lineage row
+        to ``metrics.jsonl``.  The row count piggybacks on the write job
+        (Observation) — no post-write re-read pass."""
         import json
         import time as _t
+        from pyspark.sql import Observation
+        t0 = _t.time()
+        obs = Observation()
+        self.storage.write(df.observe(obs, F.count(F.lit(1)).alias("n")),
+                           os.path.join(self._ckpt_dir, name))
         with open(os.path.join(self._ckpt_dir, "metrics.jsonl"), "a") as f:
             f.write(json.dumps({
-                "stage": stage, "rows_out": rows,
-                "wall_ms": round(wall_ms, 1), "ts": _t.time()}) + "\n")
+                "stage": name, "rows_out": obs.get["n"],
+                "wall_ms": round((_t.time() - t0) * 1000, 1),
+                "ts": _t.time()}) + "\n")
 
     def _ckpt_stage(self, name: str, build) -> DataFrame:
         """idempotent stage materialization: skip when the stage's parquet
         is complete (_SUCCESS), else compute, write, and record lineage.
         The restart contract: overwrite-by-stage, so a killed run resumes
         from the last completed stage with identical results."""
-        import time as _t
-        from pyspark.sql import Observation
         path = os.path.join(self._ckpt_dir, name)
         if not self.storage.complete(path):
-            t0 = _t.time()
-            obs = Observation()
-            self.storage.write(
-                build().observe(obs, F.count(F.lit(1)).alias("n")), path)
-            self._metric(name, obs.get["n"], (_t.time() - t0) * 1000)
+            self._write_stage(name, build())
         return self.storage.read(path)
 
     def run_checkpointed(self) -> DataFrame:
@@ -319,29 +321,31 @@ class ResolutionJob:
             "SELECT doc_id_a, doc_id_b, resolver FROM pairs_x", upto="pairs_x")
 
     def match_edges(self) -> DataFrame:
-        self.materialize()
+        """verified edges (doc_id_a, doc_id_b, resolver): the distinct
+        pairs of the edge-and-explanation stage."""
+        self._edge_stage()
         return self.stage(
-            "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
-            upto="match_edges_x")
+            "SELECT DISTINCT doc_id_a, doc_id_b, resolver FROM explain_x",
+            upto="explain_x")
 
     def explanations(self) -> DataFrame:
         """exploded match lineage (pair, resolver, attribute, matcher,
         s_a, s_b) — ≙ the `_explanation` matches array (SURVEY row 32);
         s_a/s_b are the identity scores with each side's own source's
         declared field quality (per-index granularity)."""
-        self.materialize()
+        self._edge_stage()
         return self.stage(
             "SELECT doc_id_a, doc_id_b, resolver, attr, field, matcher, "
             "s_a, s_b FROM explain_x", upto="explain_x")
 
     def pair_scores(self) -> DataFrame:
-        self.materialize()
+        self._edge_stage()
         return self.stage(
             "SELECT doc_id_a, doc_id_b, score FROM pair_scores_x",
             upto="pair_scores_x")
 
     def doc_scores(self) -> DataFrame:
-        self.materialize()
+        self._edge_stage()
         return self.stage(
             "SELECT doc_id, score FROM doc_scores_x", upto="doc_scores_x")
 
@@ -372,9 +376,7 @@ class ResolutionJob:
         if edges is None:
             # checkpoint: connected_components_by_hash consumes the edge
             # relation twice (hashed CC input + the nodes/label-restore
-            # join) — without this the whole pairs+verify plan executes
-            # twice per resolution (the dominant avoidable cost in the
-            # round-2 fixed-cost fit, BENCH/BASELINE.md)
+            # join) — one distinct over the edge stage, not two
             edges = self.match_edges() \
                 .select("doc_id_a", "doc_id_b").localCheckpoint()
         labels = connected_components_by_hash(
@@ -483,7 +485,11 @@ class ResolutionJob:
 
         Every auxiliary payload aggregates over the HIT SET only (broadcast
         semi-joins before the groupBys) — a seeded request never pays a
-        corpus-wide aggregation (round-1 ADVICE/VERDICT fix)."""
+        corpus-wide aggregation (round-1 ADVICE/VERDICT fix).  The hop BFS,
+        ``score`` and ``explanation`` all read the edge-and-explanation
+        stage (``EDGE_STAGE``): the first request against a stage dir
+        writes it, every later one (under ``cache_stages_under``) runs no
+        pair or verify plan."""
         edges = self.match_edges()
         hits = self.resolve_input(attributes=attributes, terms=terms,
                                   ids=ids, max_hops=max_hops,
@@ -518,8 +524,3 @@ class ResolutionJob:
         return bounded_label_propagation(
             self._edges_q(edges), seeds, max_hops=max_hops)
 
-
-def resolve_all(spark: SparkSession, docs: DataFrame, model: Model,
-                scope: Scope | None = None, block_cap: int = 1000) -> DataFrame:
-    """convenience: full batch resolution → (doc_id, entity_id, spans)."""
-    return ResolutionJob(spark, docs, model, scope, block_cap).clusters()

@@ -1227,6 +1227,17 @@ class CompiledPlan:
                 return sql_text
             ctes = [(n, _sub(s)) for n, s in ctes]
             select = _sub(select)
+            # drop the CTEs the query no longer reaches: Spark analyzes
+            # every WITH definition, read or not, and each storage scan in
+            # one costs a schema-inference Spark job
+            live, texts = [], [select]
+            for n, s in reversed(ctes):
+                if any(re.search(rf"\b{n}\b", t) for t in texts):
+                    live.append((n, s))
+                    texts.append(s)
+            ctes = live[::-1]
+        if not ctes:
+            return select
         body = ",\n".join(f"{n} AS ({s})" for n, s in ctes)
         kw = "WITH RECURSIVE" if recursive else "WITH"
         return f"{kw} {body}\n{select}"
