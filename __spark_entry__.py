@@ -169,7 +169,7 @@ def _hopq(out):
 
 def _q_seeded(spark, sf_dir):
     job = _job(spark, sf_dir)
-    return _hopq(job.resolve_seeded([SEED_DOC], max_hops=SEED_MAX_HOPS))
+    return _hopq(job.resolve_input(ids=[SEED_DOC], max_hops=SEED_MAX_HOPS))
 
 
 SEED_INPUT = {"name": ["john smith"], "phone": ["15550000000"]}
@@ -255,8 +255,8 @@ def _q2_seeded(spark, sf_dir):
     """seeded (max_hops) resolution on the jw/ngram model — the er2 analog
     of er_seeded_hops, so the second model's pair-generation + seeded paths
     are oracle-checked too (VERDICT r2 item 4)."""
-    return _hopq(_job2(spark, sf_dir).resolve_seeded(
-        [SEED2_DOC], max_hops=SEED2_MAX_HOPS))
+    return _hopq(_job2(spark, sf_dir).resolve_input(
+        ids=[SEED2_DOC], max_hops=SEED2_MAX_HOPS))
 
 
 def _q2_doc_scores(spark, sf_dir):

@@ -59,12 +59,6 @@ def main() -> None:
     corpus = corpus_dir_for_sf_dir(sf_dir)  # generates on first call (cached)
     extra = {"spark.driver.memory":
              os.environ.get("ZENTITY_DRIVER_MEM", "32g")}
-    # shuffle/broadcast codec A/B (VERDICT r3 next #3: the E(2→8) residual
-    # is bandwidth-shaped — zstd trades CPU for shuffle bytes):
-    # ZENTITY_IO_CODEC=zstd vs the lz4 default
-    codec = os.environ.get("ZENTITY_IO_CODEC")
-    if codec:
-        extra["spark.io.compression.codec"] = codec
     spark = get_spark(master=f"local[{cpus}]", app="zentity_bench",
                       shuffle_partitions=shuffle, extra=extra)
 

@@ -289,7 +289,7 @@ name lengths, multiplied through the composite cross); the judge's
 same-hour side-by-side measured e2e 1.19x (sf0.1) / 1.43x (sf0.3) vs
 the r3-end engine.  Round 5 re-cut to three bands (f2 len 6-8, f3 7-15,
 f4 >= 14), keeping sentinel padding and the per-band q-gram
-completeness lemma; measured at sf0.01 (scripts/band_ab.py): key rows
+completeness lemma; measured at sf0.01 (BENCH/GRAM_HEAT.md): key rows
 117,367 -> 90,325 (r3: 88,256), composite rows 131,993 -> 91,922,
 capped pair mass 277,346 -> 212,015, match edges bit-identical (19,482)
 for every candidate cut.

@@ -190,6 +190,21 @@ def test_replay_of_committed_fold_is_noop(spark, tmp_path):
     assert d.committed_fold_id() == 1
 
 
+def test_replay_of_gap_fold_id_returns_no_pairs(spark, tmp_path):
+    """fold ids may skip (empty micro-batches); replaying a skipped id
+    below the committed fold wrote nothing, so it answers with no pairs
+    instead of failing on the missing dir, and leaves the state alone."""
+    d = IncrementalDeduper(spark, str(tmp_path / "state"))
+    d.fold(_df(spark, DOCS[:3]), fold_id=0)
+    d.fold(_df(spark, DOCS[3:]), fold_id=2)
+    got = d.fold(_df(spark, DOCS[3:]), fold_id=1)
+    assert got.collect() == []
+    assert got.columns == ["doc_id_a", "doc_id_b", "jaccard"]
+    assert d.committed_fold_id() == 2
+    assert ({(r[0], r[1]): r[2] for r in d.pairs().collect()}
+            == _batch_pairs(spark, DOCS))
+
+
 def test_legacy_state_without_accounting_still_compacts(spark, tmp_path):
     """a pre-accounting CURRENT ({'fold_id': i} only, base_rows absent)
     must not disable compaction forever: the next fold compacts

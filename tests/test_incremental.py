@@ -80,6 +80,40 @@ def test_untouched_components_preserved(folded):
         assert inc_map[d] == base_map[d]
 
 
+def test_fold_writes_state_once(spark, model, split, tmp_path, monkeypatch):
+    """a fold writes each Δ stage straight into the state: it never runs
+    the batch stage materialization, builds one job, persists no vals_x
+    stage (nothing reads it back), counts its Δ edges from the edge
+    partition it wrote, and still serves the batch labels."""
+    base, delta = split
+    jobs = []
+    init = ResolutionJob.__init__
+
+    def counting_init(self, *a, **kw):
+        jobs.append(self)
+        init(self, *a, **kw)
+
+    def no_materialize(self, stages=None):
+        raise AssertionError("the fold must not call materialize()")
+
+    monkeypatch.setattr(ResolutionJob, "materialize", no_materialize)
+    monkeypatch.setattr(ResolutionJob, "__init__", counting_init)
+    r = IncrementalResolver(spark, model, str(tmp_path / "st"))
+    r.add(base)
+    jobs.clear()
+    r.add(delta)
+    assert len(jobs) == 1
+    inc = _labels(r.clusters())
+    monkeypatch.undo()
+    assert not os.path.exists(r._path("vals_x"))
+    fold = r.committed_fold_id()
+    assert r.last_delta_edges == r.storage.read(
+        r._part("edges", fold)).count() > 0
+    job = ResolutionJob(spark, base.unionByName(delta), model)
+    assert inc == _labels(job.clusters())
+    job.unpersist()
+
+
 def test_three_way_fold(spark, model, docs_sf0001, tmp_path):
     parts = [docs_sf0001.where(f"pmod(xxhash64(doc_id), 3) = {i}")
              for i in range(3)]

@@ -152,9 +152,13 @@ class IncrementalDeduper:
             # all reads.  Return the recorded per-fold pairs when the dir
             # still exists; a fold whose dir was compacted away (or that
             # compacted itself) answers with the full accumulated pair
-            # set — the closest recoverable superset.
-            if i >= cur.get("base_inc", 0) and i != cur.get("base_inc", 0):
-                return (self.storage.read(self._part("pairs", i))
+            # set — the closest recoverable superset.  A gap id (a
+            # skipped empty micro-batch) never wrote a dir: no pairs.
+            if i > cur.get("base_inc", 0):
+                part = self._part("pairs", i)
+                if not self.storage.exists(part):
+                    return self.pairs().limit(0)
+                return (self.storage.read(part)
                         .select("doc_id_a", "doc_id_b", "jaccard"))
             return self.pairs()
         # one evaluation of the increment for every downstream use (the

@@ -16,14 +16,17 @@ incrementally than in one batch (the cap is an approximation in the
 reference too: ``max_docs_per_query``).
 
 Why increments are cheap:
-  * every pre-pair stage (attrs/keys/vals/vals_wide/composite keys) is
-    PER-DOCUMENT — stage(D ∪ Δ) = stage(D) ∪ stage(Δ) — so the state dir
-    just appends the Δ rows to each stage's parquet;
+  * every pre-pair stage (attrs/keys/vals_wide/composite keys) is
+    PER-DOCUMENT — stage(D ∪ Δ) = stage(D) ∪ stage(Δ) — so a fold writes
+    each stage's Δ rows ONCE, straight into the state, each stage reading
+    the Δ partitions its predecessors just wrote;
   * Δ candidate pairs probe the combined key table with only the new
     docs' composite keys (compiler.sql_pairs_delta), broadcast when the
     increment is small: no shuffle of the old keys, no old×old join;
-  * verification reuses the compiled match_edges plan with ``pairs_x``
-    redirected at the Δ pair relation;
+  * verification reuses the compiled match_edges plan of the same Δ job,
+    its per-doc stages re-pointed at the combined state and ``pairs_x``
+    at the Δ pair relation; the verified edges are written once and read
+    back;
   * only components TOUCHED by a Δ edge re-cluster: old labels restricted
     to touched entities re-enter connected components as star edges
     (label forest ≡ old connectivity), untouched labels pass through
@@ -31,8 +34,8 @@ Why increments are cheap:
 
 State layout under ``state_dir``:
     docs/inc=<fold_id>/   ingested documents, ONE subdir per increment
-    attrs_x/ keys_x/ vals_x/ vals_wide_x/ ck_<resolver>/  (same inc= layout)
-                   per-doc stage rows per increment
+    attrs_x/ keys_x/ vals_wide_x/ ck_<resolver>/  (same inc= layout)
+                   per-doc stage rows per increment, each written once
     edges/inc=<fold_id>/  verified match edges (full edge log ⇒ the
                    labels can always be rebuilt from scratch)
     labels/inc=<fold_id>/ ONLY the components relabeled by that fold
@@ -80,7 +83,7 @@ from zentity_spark.pipeline import DEFAULT_SCOPE, ResolutionJob
 from zentity_spark.plans.compiler import Scope
 
 # per-document stages whose union across increments equals the batch stage
-PER_DOC_STAGES = ("attrs_x", "keys_x", "vals_x", "vals_wide_x")
+PER_DOC_STAGES = ("attrs_x", "keys_x", "vals_wide_x")
 
 # conservative per-row id-width estimate for byte-gating the delta-label
 # broadcast in labels() (doc_id strings are ~8-16 bytes in the fixture
@@ -144,8 +147,8 @@ class IncrementalResolver:
         with open(self._ptr) as f:
             return json.load(f)
 
-    def _ck_stages(self, job: ResolutionJob) -> list:
-        return [f"ck_{r.name}" for r in job.plan.active_resolvers()]
+    def _ck_stages(self, job: ResolutionJob) -> tuple:
+        return tuple(f"ck_{r.name}" for r in job.plan.active_resolvers())
 
     def docs(self) -> DataFrame:
         return self.storage.read(self._path("docs")).select("doc_id", "spans")
@@ -225,7 +228,6 @@ class IncrementalResolver:
         the increment for replay idempotency — a stream passes its
         micro-batch id (stable across retries); direct callers default to
         the next batch ordinal."""
-        spark = self.spark
         cur = self._current()
         committed = self.committed_fold_id()
         if fold_id is None:
@@ -246,19 +248,18 @@ class IncrementalResolver:
         return self._fold_delta(fold_id)
 
     def _write_stage_rows(self, job: ResolutionJob, fold_id: int) -> None:
-        """write the increment's per-doc stage rows + composite keys into
-        the state dirs (job is over the Δ docs ONLY; its stages ARE the
-        Δ rows of the combined stages); overwrite-per-increment for
-        replay idempotency."""
-        job.materialize()  # Δ-local: attrs/keys/vals_wide (+ ck if skewed)
-        for st in PER_DOC_STAGES:
-            self.storage.write(
-                job.stage(f"SELECT * FROM {st}", upto=st),
-                self._part(st, fold_id))
-        for st in self._ck_stages(job):
-            self.storage.write(
-                job.stage(f"SELECT doc_id, ckey FROM {st}", upto=st),
-                self._part(st, fold_id))
+        """write the increment's per-doc stage rows + composite keys
+        straight into their ``inc=<fold_id>`` partitions, each stage once
+        (job is over the Δ docs ONLY; its stages ARE the Δ rows of the
+        combined stages).  Each stage reads the partitions its
+        predecessors just wrote; overwrite mode makes a replayed fold
+        replace its own partial output.  The composite keys do not depend
+        on the skew policy, so no keys aggregate runs here."""
+        for st in PER_DOC_STAGES + self._ck_stages(job):
+            part = self._part(st, fold_id)
+            self.storage.write(job.stage(f"SELECT * FROM {st}", upto=st),
+                               part)
+            job._replace[st] = self.storage.scan_sql(part)
 
     def _bootstrap(self, docs: DataFrame, fold_id: int) -> DataFrame:
         """first increment = the full batch path (keeps the batch plan's
@@ -267,13 +268,13 @@ class IncrementalResolver:
         job = ResolutionJob(self.spark, docs, self.model, self.scope,
                             self.block_cap)
         self._write_stage_rows(job, fold_id)
+        job._compute_skew_policy()
         # the compiled edge plan, not match_edges(): the fold never reads
         # explanations, so it skips writing the edge-and-explanation stage
         edges = job.stage(
             "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
             upto="match_edges_x")
         self.storage.write(edges, self._part("edges", fold_id))
-        job.unpersist()
         edges = self.storage.read(self._path("edges"))
         labels = connected_components_by_hash(
             edges.select("doc_id_a", "doc_id_b"),
@@ -283,7 +284,6 @@ class IncrementalResolver:
     def _fold_delta(self, fold_id: int) -> DataFrame:
         spark = self.spark
         cur = self._current()
-        docs_all = self.docs()
         # Δ = every doc landed SINCE the last committed fold: the docs
         # table is inc-partitioned, so ``inc > committed`` is exactly the
         # set no committed label state has seen — the current increment
@@ -295,17 +295,15 @@ class IncrementalResolver:
                     .where(F.col("inc") > cur["fold_id"])
                     .select("doc_id", "spans"))
 
-        # 1. Δ per-doc stage rows appended
-        dj = ResolutionJob(spark, new_docs, self.model, self.scope,
-                           self.block_cap)
-        self._write_stage_rows(dj, fold_id)
-        dj.unpersist()
-
-        # 2. combined-corpus job with every per-doc stage redirected at the
-        # state parquet — nothing per-doc recomputes for old docs
-        job = ResolutionJob(spark, docs_all, self.model, self.scope,
+        # 1. Δ per-doc stage rows written once, into the state
+        job = ResolutionJob(spark, new_docs, self.model, self.scope,
                             self.block_cap)
-        for st in PER_DOC_STAGES + tuple(self._ck_stages(job)):
+        self._write_stage_rows(job, fold_id)
+
+        # 2. the same job re-pointed at the combined state roots — nothing
+        # per-doc recomputes for old docs; the skew policy comes from the
+        # combined keys
+        for st in PER_DOC_STAGES + self._ck_stages(job):
             job._replace[st] = self._scan(st)
         job._compute_skew_policy()
 
@@ -336,7 +334,8 @@ class IncrementalResolver:
             "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
             upto="match_edges_x")
         self.storage.write(d_edges, self._part("edges", fold_id))
-        d_edges = d_edges.localCheckpoint()
+        # read back, not re-derived: the verify plan executes once
+        d_edges = self.storage.read(self._part("edges", fold_id))
         self.last_delta_edges = d_edges.count()
 
         # 5. merge: re-cluster touched components only.  The fold COMMITS
@@ -356,7 +355,6 @@ class IncrementalResolver:
         relabeled = connected_components_by_hash(
             star.union(d_edges.select("doc_id_a", "doc_id_b")),
             wide_ids=self.wide_cc_ids)
-        job.unpersist()
         return self._commit(relabeled, fold_id)
 
     def _commit(self, delta_labels: DataFrame, fold_id: int,

@@ -508,19 +508,3 @@ class ResolutionJob:
             out = out.join(self.docs.select("doc_id", "spans"), "doc_id",
                            "left")
         return out
-
-    def resolve_seeded(self, seed_doc_ids, max_hops: int = 100,
-                       edges: DataFrame | None = None) -> DataFrame:
-        """seeded mode (≙ one reference resolution request): docs reachable
-        from the seeds within max_hops, with _hop/_query ordinals
-        (SURVEY §8 M6)."""
-        if edges is None:
-            edges = self.match_edges()
-        if isinstance(seed_doc_ids, (list, tuple)):
-            seeds = self.spark.createDataFrame(
-                [(s,) for s in seed_doc_ids], "doc_id string")
-        else:
-            seeds = seed_doc_ids
-        return bounded_label_propagation(
-            self._edges_q(edges), seeds, max_hops=max_hops)
-

@@ -74,8 +74,8 @@ _PAIR_SEP = "§"
 # lengths, growing key rows +33% at identical pair output, and key volume
 # multiplies through the per-resolver composite cross — judge-measured
 # same-hour e2e regression 1.19×/1.43× at sf0.1/sf0.3.  Three bands with
-# the single f3/f4 seam pushed past the name-length mode (scripts/
-# band_ab.py, sf0.01 fixture: key rows 117,367 → 90,325, composite rows
+# the single f3/f4 seam pushed past the name-length mode (BENCH/
+# GRAM_HEAT.md, sf0.01 fixture: key rows 117,367 → 90,325, composite rows
 # 131,993 → 91,922, capped pair mass 277,346 → 212,015, match edges
 # identical at 19,482 for every candidate cut — the per-band lemma is
 # volume-free).  f4 stays (len ≥ 14) so long values never emit corpus-hot
