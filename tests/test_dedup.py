@@ -145,7 +145,7 @@ def test_replayed_compacting_fold_converges(spark, tmp_path, monkeypatch):
     caller skips it) leaves its full-view inc dirs written, the pointer at
     the previous fold, and the older dirs intact; the replay overwrites
     its own dirs and converges to the identical state."""
-    from zentity_spark.operators import dedup as dd
+    from zentity_spark import io as zio
     state = str(tmp_path / "state")
     d = IncrementalDeduper(spark, state, auto_compact_ratio=0.5)
     d.fold(_df(spark, DOCS[:3]))
@@ -154,10 +154,10 @@ def test_replayed_compacting_fold_converges(spark, tmp_path, monkeypatch):
     def crash(src, dst):
         raise OSError("simulated crash before pointer rename")
 
-    monkeypatch.setattr(dd.os, "replace", crash)
+    monkeypatch.setattr(zio.os, "replace", crash)
     with pytest.raises(OSError):
         d.fold(_df(spark, DOCS[3:]))         # compacts (delta 3 > 1.5)
-    monkeypatch.setattr(dd.os, "replace", real_replace)
+    monkeypatch.setattr(zio.os, "replace", real_replace)
     d2 = IncrementalDeduper(spark, state, auto_compact_ratio=0.5)
     assert d2.committed_fold_id() == 0       # pointer never moved
     d2.fold(_df(spark, DOCS[3:]))            # replay converges

@@ -11,6 +11,7 @@ recursive-CTE clustering directly.
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -228,6 +229,53 @@ def test_label_auto_compaction(spark, model, tmp_path):
     r.add(d2)            # delta 4 rows > 0.5×5 → compact into inc=2
     assert _inc_dirs(r) == ["inc=2"]
     job = ResolutionJob(spark, base.unionByName(d1).unionByName(d2), model)
+    assert _labels(r.clusters()) == _labels(job.clusters())
+    job.unpersist()
+
+
+def _edgeless_corpus(spark):
+    """an edge-less bootstrap (two unrelated docs), then two one-doc
+    increments that each link one of them."""
+    base = make_docs(spark, [
+        ("a-000001", [("full_name", "Alicia Keys"),
+                      ("birth_date", "1981-01-25")]),
+        ("a-000007", [("full_name", "Carol Chan"),
+                      ("birth_date", "1970-02-02")]),
+    ])
+    d1 = make_docs(spark, [
+        ("b-000001", [("full_name", "Alicia Keys"),
+                      ("birth_date", "1981-01-25")])])
+    d2 = make_docs(spark, [
+        ("a-000008", [("full_name", "Carol Chan"),
+                      ("birth_date", "1970-02-02")])])
+    return base, [d1, d2]
+
+
+@pytest.mark.parametrize("case", ["edgeless_bootstrap", "legacy_pointer"])
+def test_label_base_without_rows_compacts(spark, model, tmp_path, case):
+    """a labels base with no rows to take a ratio of (an edge-less
+    bootstrap, or a CURRENT written before row accounting) compacts at
+    the first non-empty delta instead of never."""
+    if case == "edgeless_bootstrap":
+        base, deltas = _edgeless_corpus(spark)
+        ratio = 0.5
+    else:
+        base, d1, _d2 = _chain_corpus(spark)
+        deltas, ratio = [d1], 4.0
+    state = str(tmp_path / "st")
+    IncrementalResolver(spark, model, state,
+                        auto_compact_ratio=ratio).add(base)
+    if case == "legacy_pointer":
+        with open(os.path.join(state, "CURRENT"), "w") as f:
+            json.dump({"fold_id": 0, "n_batches": 1}, f)
+    r = IncrementalResolver(spark, model, state, auto_compact_ratio=ratio)
+    for d in deltas:
+        r.add(d)
+    assert _inc_dirs(r) == [f"inc={len(deltas)}"]
+    all_docs = base
+    for d in deltas:
+        all_docs = all_docs.unionByName(d)
+    job = ResolutionJob(spark, all_docs, model)
     assert _labels(r.clusters()) == _labels(job.clusters())
     job.unpersist()
 

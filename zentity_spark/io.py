@@ -21,14 +21,19 @@ Iceberg by constructing ``Storage(spark, fmt="iceberg")`` or exporting
 The swap is tested without the Iceberg jars by running the resume and
 incremental flows under another built-in format (``orc``) with zero
 engine-code changes (tests/test_io.py).
+
+``FoldState`` is the state protocol of the incremental folds on top of
+``Storage``: per-increment overwrite partitions, the ``CURRENT`` commit
+pointer and ratio-gated compaction.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # formats whose tables are filesystem directories with committer markers;
 # anything else is treated as a catalog-managed table format
@@ -60,9 +65,6 @@ class Storage:
     def write(self, df: DataFrame, loc: str, mode: str = "overwrite") -> None:
         (df.write.format(self.fmt).options(**self.options)
          .mode(mode).save(loc))
-
-    def append(self, df: DataFrame, loc: str) -> None:
-        self.write(df, loc, mode="append")
 
     def overwrite_atomic(self, df: DataFrame, loc: str) -> None:
         """replace ``loc`` so readers never observe a half-written table.
@@ -123,3 +125,109 @@ class Storage:
         return (df.writeStream.format(self.fmt).options(**self.options)
                 .option("path", loc)
                 .option("checkpointLocation", checkpoint_dir))
+
+
+class FoldState:
+    """The on-disk protocol both incremental folds share
+    (operators/incremental.py, operators/dedup.py).  Subclasses decide
+    which stages a fold writes and what it counts as rows; this class
+    owns where those rows live and when a fold becomes visible.
+
+    * Every per-increment write OVERWRITES ``<stage>/inc=<fold_id>``, so a
+      replayed fold (a Structured Streaming micro-batch retried with the
+      same batch_id and rows) replaces its own partial output instead of
+      appending duplicates.
+    * ``CURRENT`` is the commit point: ``{"fold_id", "base_inc",
+      "base_rows", "delta_rows"}``, written aside and renamed into place.
+      Readers see only the committed range ``base_inc <= inc <= fold_id``,
+      so incs of a fold that crashed before its rename are invisible.
+    * Ratio-gated compaction bounds read amplification, LSM-style: a
+      compacting fold writes the full current view of each ``COMPACTED``
+      stage into its own inc and becomes the new base; the older incs
+      are dropped after the rename.  A crash between rename and drop
+      leaves only incs below ``base_inc``, which no read sees and the
+      next compaction removes.
+    """
+
+    # stages a compacting fold rewrites as one full inc; the compaction
+    # gate counts the rows of the first
+    COMPACTED: tuple[str, ...] = ()
+
+    def __init__(self, spark: SparkSession, state_dir: str,
+                 storage: Storage | None = None,
+                 auto_compact_ratio: float | None = 4.0):
+        self.spark = spark
+        self.storage = storage if storage is not None else Storage(spark)
+        # compact when cumulative delta rows exceed ratio × the last
+        # compacted base (None/0 disables auto-compaction)
+        self.auto_compact_ratio = auto_compact_ratio
+        self.state_dir = state_dir
+        os.makedirs(state_dir, exist_ok=True)
+        self._ptr = os.path.join(state_dir, "CURRENT")
+
+    def _path(self, stage: str) -> str:
+        return os.path.join(self.state_dir, stage)
+
+    def _part(self, stage: str, fold_id: int) -> str:
+        """per-increment overwrite target (partition-dir layout, so reading
+        the stage root sees the union of all incs plus an ``inc`` column)."""
+        return os.path.join(self._path(stage), f"inc={fold_id}")
+
+    def _current(self) -> dict | None:
+        if not os.path.exists(self._ptr):
+            return None
+        with open(self._ptr) as f:
+            return json.load(f)
+
+    def committed_fold_id(self) -> int:
+        """fold_id of the last COMMITTED increment (-1 before the first) —
+        the skip gate for replayed stream micro-batches."""
+        cur = self._current()
+        return cur.get("fold_id", -1) if cur else -1
+
+    def _read_range(self, stage: str, lo: int, hi: int) -> DataFrame:
+        """union of the incs in [lo, hi] — lo is normally the committed
+        base_inc, hiding stale pre-compaction incs a crashed cleanup left."""
+        return (self.storage.read(self._path(stage))
+                .where((F.col("inc") >= lo) & (F.col("inc") <= hi)))
+
+    def _compact_due(self, cur: dict | None, delta_rows: int) -> bool:
+        """whether a fold adding ``delta_rows`` rows compacts.  The first
+        fold does (its delta IS the state).  A base of 0 rows, or a pointer
+        without row accounting, compacts at the first non-empty delta:
+        no ratio of it could ever be crossed."""
+        if cur is None:
+            return True
+        total = (cur.get("delta_rows") or 0) + delta_rows
+        base_rows = cur.get("base_rows")
+        ratio = self.auto_compact_ratio or 0
+        return bool(ratio and total
+                    and (not base_rows or total > ratio * base_rows))
+
+    def _commit(self, cur: dict | None, fold_id: int, delta_rows: int,
+                compact: bool) -> None:
+        """make fold ``fold_id`` visible by renaming its pointer into place;
+        a compacting fold then drops the older incs of every ``COMPACTED``
+        stage.  The base is recounted from the inc just written, so a
+        pointer without accounting cannot carry a wrong count forward."""
+        if compact:
+            base_rows = self.storage.read(
+                self._part(self.COMPACTED[0], fold_id)).count()
+            ptr = {"fold_id": fold_id, "base_inc": fold_id,
+                   "base_rows": base_rows, "delta_rows": 0}
+        else:
+            ptr = {"fold_id": fold_id, "base_inc": cur.get("base_inc") or 0,
+                   "base_rows": cur.get("base_rows") or 0,
+                   "delta_rows": (cur.get("delta_rows") or 0) + delta_rows}
+        tmp = self._ptr + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(ptr, f)
+        os.replace(tmp, self._ptr)
+        # catalog formats: superseded rows are harmless (reads filter by
+        # base_inc); snapshot expiry is the catalog's job
+        if compact and self.storage.file_based:
+            for stage in self.COMPACTED:
+                root = self._path(stage)
+                for d in os.listdir(root):
+                    if d.startswith("inc=") and int(d[4:]) != fold_id:
+                        self.storage.remove(os.path.join(root, d))

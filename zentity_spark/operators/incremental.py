@@ -32,50 +32,36 @@ Why increments are cheap:
     (label forest ≡ old connectivity), untouched labels pass through
     byte-identical.
 
-State layout under ``state_dir``:
+State layout under ``state_dir`` (the ``inc=<fold_id>`` overwrite
+partitions, the ``CURRENT`` commit and the compaction gate are
+``io.FoldState``'s; only ``labels`` compacts, and the gate counts label
+rows):
     docs/inc=<fold_id>/   ingested documents, ONE subdir per increment
     attrs_x/ keys_x/ vals_wide_x/ ck_<resolver>/  (same inc= layout)
                    per-doc stage rows per increment, each written once
     edges/inc=<fold_id>/  verified match edges (full edge log ⇒ the
                    labels can always be rebuilt from scratch)
     labels/inc=<fold_id>/ ONLY the components relabeled by that fold
-                   (bootstrap writes the full label set); the current
-                   label of a doc is its row at the HIGHEST committed
-                   inc — latest-writer-wins per doc_id
-    CURRENT        json pointer {"fold_id": i, "n_batches": k,
-                                 "base_rows": b, "delta_rows": d}
+                   (a compacting fold writes the full label set); the
+                   current label of a doc is its row at the HIGHEST
+                   committed inc — latest-writer-wins per doc_id
 
 Every state table is delta-partitioned, so a fold WRITES O(Δ + touched
 components), never O(N) — the labels/seen-ids full rewrite that used to
 dominate fold cost at large N (BENCH/incremental_bench.json r4) is gone.
 Docs not yet visible in any committed label inc (``inc > CURRENT.fold_id``)
 ARE the next fold's Δ, which both removes the separate seen-id table and
-self-heals increments orphaned by a crash.  Read amplification is bounded
-by ratio-gated compaction (``auto_compact_ratio``): when the cumulative
-delta rows exceed the ratio × the last compacted base, the commit writes
-the full current view instead of the delta and drops older incs —
-amortized O(1) extra write per label row, LSM-style.
-
-Exactly-once folds (ADVICE r3 medium): every per-increment write goes to a
-deterministic ``inc=<fold_id>`` subdirectory in OVERWRITE mode, so a
-replayed fold (Structured Streaming retries a micro-batch after a
-mid-fold crash, with the same batch_id and the same rows) replaces its
-own partial output instead of appending duplicates; labels written at an
-uncommitted inc are invisible to readers (the view filters
-``inc <= CURRENT.fold_id``), and CURRENT commits via atomic rename.  A
-fold that already committed is skipped entirely by the caller via
+self-heals increments orphaned by a crash.  A fold that already
+committed is refused here and skipped by the stream caller via
 ``committed_fold_id()`` (streaming/resolve.py).
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from zentity_spark import dialect as D
-from zentity_spark.io import Storage
+from zentity_spark.io import FoldState, Storage
 from zentity_spark.model import Model
 from zentity_spark.operators.cluster import (_id_stats, broadcast_row_budget,
                                              connected_components_by_hash)
@@ -91,18 +77,24 @@ PER_DOC_STAGES = ("attrs_x", "keys_x", "vals_wide_x")
 _LABEL_ID_BYTES = 32.0
 
 
+def _latest(labels: DataFrame) -> DataFrame:
+    """each doc's label at its highest inc (latest-writer-wins)."""
+    return (labels.groupBy("doc_id")
+            .agg(F.max_by("entity_id", "inc").alias("entity_id")))
 
-class IncrementalResolver:
+
+class IncrementalResolver(FoldState):
     """Stateful incremental resolution over a model (SURVEY §3 operators,
     re-expressed as a fold).  Not thread-safe; one writer per state_dir."""
+
+    COMPACTED = ("labels",)
 
     def __init__(self, spark: SparkSession, model: Model, state_dir: str,
                  scope: Scope | None = None, block_cap: int = 1000,
                  storage: Storage | None = None,
                  auto_compact_ratio: float = 4.0,
                  wide_cc_ids: bool = False):
-        self.spark = spark
-        self.storage = storage if storage is not None else Storage(spark)
+        super().__init__(spark, state_dir, storage, auto_compact_ratio)
         self.model = model
         self.scope = scope if scope is not None else DEFAULT_SCOPE
         self.block_cap = block_cap
@@ -110,12 +102,6 @@ class IncrementalResolver:
         # operating mode, so the collision-margin flag must be reachable
         # here, not only on the batch job (see connected_components_by_hash)
         self.wide_cc_ids = wide_cc_ids
-        # compact the labels table when cumulative delta rows exceed
-        # ratio × the last compacted base (None/0 disables auto-compaction)
-        self.auto_compact_ratio = auto_compact_ratio
-        self.state_dir = state_dir
-        os.makedirs(state_dir, exist_ok=True)
-        self._ptr = os.path.join(state_dir, "CURRENT")
         # observability for tests/operators: executed plan of the last Δ
         # pair job (asserts the broadcast), last Δ edge count
         self.last_pairs_plan: str | None = None
@@ -123,29 +109,8 @@ class IncrementalResolver:
 
     # ---------- state helpers ----------
 
-    def _path(self, stage: str) -> str:
-        return os.path.join(self.state_dir, stage)
-
-    def _part(self, stage: str, fold_id: int) -> str:
-        """per-increment overwrite target: replayed folds replace their own
-        partial output (partition-dir layout, so reading the stage root
-        sees the union of all increments plus an ``inc`` column)."""
-        return os.path.join(self._path(stage), f"inc={fold_id}")
-
-    def committed_fold_id(self) -> int:
-        """fold_id of the last COMMITTED increment (-1 before the first) —
-        the skip gate for replayed stream micro-batches."""
-        cur = self._current()
-        return cur.get("fold_id", -1) if cur else -1
-
     def _scan(self, stage: str) -> str:
         return self.storage.scan_sql(self._path(stage))
-
-    def _current(self) -> dict | None:
-        if not os.path.exists(self._ptr):
-            return None
-        with open(self._ptr) as f:
-            return json.load(f)
 
     def _ck_stages(self, job: ResolutionJob) -> tuple:
         return tuple(f"ck_{r.name}" for r in job.plan.active_resolvers())
@@ -173,41 +138,25 @@ class IncrementalResolver:
         #     base ANTI-JOIN broadcast(delta doc_ids) ∪ deltas — the base
         #     streams through unshuffled, so the steady-state fold between
         #     compactions stays O(Δ)-shuffle;
-        #   * otherwise (deltas near the compaction threshold, catalog
-        #     formats, or a pre-base_inc state file) fall back to the
-        #     full latest-wins aggregate.
-        # Stale dirs below base_inc (a crashed compaction cleanup) are
-        # skipped entirely: the compacted inc holds the full view.
-        root = self._path("labels")
-        base_inc = cur.get("base_inc")
-        if (self.storage.file_based and base_inc is not None
-                and os.path.isdir(root)):
-            incs = [int(d.split("=")[1]) for d in os.listdir(root)
-                    if d.startswith("inc=")
-                    and int(d.split("=")[1]) <= cur["fold_id"]]
-            if base_inc in incs:
-                base = (self.storage.read(
-                            os.path.join(root, f"inc={base_inc}"))
-                        .select("doc_id", "entity_id"))
-                if not any(i > base_inc for i in incs):
-                    return base
-                d_rows = cur.get("delta_rows") or 0
-                if 0 < d_rows <= broadcast_row_budget(
-                        self.spark, _LABEL_ID_BYTES):
-                    deltas = (self.storage.read(root)
-                              .where((F.col("inc") > base_inc)
-                                     & (F.col("inc") <= cur["fold_id"])))
-                    d_latest = (deltas.groupBy("doc_id")
-                                .agg(F.max_by("entity_id", "inc")
-                                     .alias("entity_id")))
-                    return (base.join(
-                                F.broadcast(d_latest.select("doc_id")),
-                                "doc_id", "left_anti")
-                            .unionByName(d_latest))
-        lab = (self.storage.read(root)
-               .where(F.col("inc") <= cur["fold_id"]))
-        return (lab.groupBy("doc_id")
-                .agg(F.max_by("entity_id", "inc").alias("entity_id")))
+        #   * otherwise (deltas near the compaction threshold, or a
+        #     pointer without row accounting) fall back to the full
+        #     latest-wins aggregate.
+        # Every committed fold writes its labels inc, so the pointer alone
+        # says which incs exist in the committed range.
+        fold_id, base_inc = cur["fold_id"], cur.get("base_inc") or 0
+        if fold_id == base_inc:
+            return (self.storage.read(self._part("labels", base_inc))
+                    .select("doc_id", "entity_id"))
+        d_rows = cur.get("delta_rows") or 0
+        if 0 < d_rows <= broadcast_row_budget(self.spark, _LABEL_ID_BYTES):
+            base = (self.storage.read(self._part("labels", base_inc))
+                    .select("doc_id", "entity_id"))
+            d_latest = _latest(
+                self._read_range("labels", base_inc + 1, fold_id))
+            return (base.join(F.broadcast(d_latest.select("doc_id")),
+                              "doc_id", "left_anti")
+                    .unionByName(d_latest))
+        return _latest(self._read_range("labels", base_inc, fold_id))
 
     def clusters(self) -> DataFrame:
         """(doc_id, entity_id, spans) for every ingested doc — singletons
@@ -228,11 +177,10 @@ class IncrementalResolver:
         the increment for replay idempotency — a stream passes its
         micro-batch id (stable across retries); direct callers default to
         the next batch ordinal."""
-        cur = self._current()
         committed = self.committed_fold_id()
         if fold_id is None:
             # strictly above every committed fold — stream batch_ids can
-            # skip ordinals (empty batches), so n_batches+1 could collide
+            # skip ordinals (empty batches), so a fold count could collide
             # with (and overwrite) an existing inc= dir
             fold_id = committed + 1
         elif fold_id <= committed:
@@ -243,7 +191,7 @@ class IncrementalResolver:
         self.storage.write(new_docs, self._part("docs", fold_id))
         # re-read from the state table: one scan source for every
         # downstream use (and the input plan may be a one-shot stream batch)
-        if cur is None:
+        if committed < 0:
             return self._bootstrap(self.docs(), fold_id)
         return self._fold_delta(fold_id)
 
@@ -279,7 +227,7 @@ class IncrementalResolver:
         labels = connected_components_by_hash(
             edges.select("doc_id_a", "doc_id_b"),
             wide_ids=self.wide_cc_ids)
-        return self._commit(labels, fold_id, compact=True)
+        return self._commit_labels(labels, fold_id)
 
     def _fold_delta(self, fold_id: int) -> DataFrame:
         spark = self.spark
@@ -355,62 +303,26 @@ class IncrementalResolver:
         relabeled = connected_components_by_hash(
             star.union(d_edges.select("doc_id_a", "doc_id_b")),
             wide_ids=self.wide_cc_ids)
-        return self._commit(relabeled, fold_id)
+        return self._commit_labels(relabeled, fold_id)
 
-    def _commit(self, delta_labels: DataFrame, fold_id: int,
-                compact: bool = False) -> DataFrame:
+    def _commit_labels(self, delta_labels: DataFrame,
+                       fold_id: int) -> DataFrame:
         """commit one fold's label delta at ``labels/inc=<fold_id>``.
 
         Deterministic under replay: the delta is a pure function of the
         committed state + the increment's rows, and the partition write is
         an overwrite — a crashed-then-replayed fold converges to the same
-        bytes.  Compaction (bootstrap, or when the cumulative deltas
-        exceed ``auto_compact_ratio`` × the compacted base) folds the full
-        current view into THIS inc and drops the older incs after the
-        pointer rename — a crash between rename and removal leaves only
-        rows that the latest-wins view already supersedes."""
+        bytes.  A compacting fold writes the full current view (older
+        committed incs ⊕ this delta) into THIS inc instead."""
         cur = self._current()
-        n = (cur["n_batches"] + 1) if cur else 1
         delta_labels = delta_labels.select("doc_id",
                                            "entity_id").localCheckpoint()
         d_rows = delta_labels.count()
-        base_rows = cur.get("base_rows", 0) if cur else 0
-        delta_rows = (cur.get("delta_rows", 0) if cur else 0) + d_rows
-        ratio = self.auto_compact_ratio or 0
-        if cur and ratio and base_rows and delta_rows > ratio * base_rows:
-            compact = True
-        drop_incs: list[str] = []
-        if compact:
-            if cur:  # full view = older committed incs ⊕ this delta
-                older = (self.labels()
-                         .join(delta_labels, "doc_id", "left_anti"))
-                delta_labels = older.unionByName(delta_labels)
-                root = self._path("labels")
-                if self.storage.file_based:
-                    drop_incs = [os.path.join(root, d)
-                                 for d in os.listdir(root)
-                                 if d.startswith("inc=")
-                                 and int(d.split("=")[1]) != fold_id]
-                # catalog formats: superseded rows are harmless (the
-                # latest-wins view ignores them); snapshot expiry is the
-                # catalog's job
-            base_rows, delta_rows = None, 0  # recount below
+        compact = self._compact_due(cur, d_rows)
+        if compact and cur:
+            delta_labels = (self.labels()
+                            .join(delta_labels, "doc_id", "left_anti")
+                            .unionByName(delta_labels))
         self.storage.write(delta_labels, self._part("labels", fold_id))
-        if base_rows is None:
-            base_rows = self.storage.read(
-                self._part("labels", fold_id)).count()
-        # base_inc = the inc holding the last compacted FULL view; read
-        # paths use it to serve base + small-delta reads without an O(N)
-        # aggregate, and to ignore stale pre-compaction dirs a crashed
-        # cleanup may have left behind
-        base_inc = fold_id if compact else (
-            cur.get("base_inc") if cur else None)
-        tmp = self._ptr + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"fold_id": fold_id, "n_batches": n,
-                       "base_rows": base_rows, "delta_rows": delta_rows,
-                       "base_inc": base_inc}, f)
-        os.replace(tmp, self._ptr)
-        for p in drop_incs:
-            self.storage.remove(p)
+        self._commit(cur, fold_id, d_rows, compact)
         return self.labels()

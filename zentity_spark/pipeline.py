@@ -61,7 +61,6 @@ class ResolutionJob:
         self._view = "docs_" + uuid.uuid4().hex[:12]
         docs.createOrReplaceTempView(self._view)
         self._replace: dict = {}
-        self._persisted: list = []
 
     def stage(self, select: str, upto: str | None = None,
               extra: list | None = None) -> DataFrame:
