@@ -117,8 +117,7 @@ def _q_pairs(spark, sf_dir):
 
 
 def _q_edges(spark, sf_dir):
-    return _job(spark, sf_dir).stage(
-        "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x")
+    return _job(spark, sf_dir).match_edges()
 
 
 def _q_clusters(spark, sf_dir):
@@ -231,8 +230,7 @@ def _q2_keys(spark, sf_dir):
 
 
 def _q2_edges(spark, sf_dir):
-    return _job2(spark, sf_dir).stage(
-        "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x")
+    return _job2(spark, sf_dir).match_edges()
 
 
 def _q2_clusters(spark, sf_dir):
@@ -449,17 +447,26 @@ def _oracle_seeded() -> str:
         SEED_MAX_HOPS)
 
 
-def _normalize_probe(plan, attrs: dict) -> dict:
-    """normalize raw input values with the DuckDB render of each
-    attribute's compiled normalizer — the oracle-side twin of
-    input.build_probe (seed_ctes expects NORMALIZED values; e.g. a
-    dd/MM/yyyy date input must reach the probe in canonical form)."""
+def _oracle_probe(plan, attributes=None, terms=None) -> dict:
+    """the ORACLE side of input.build_probe: input attributes plus terms
+    type-coerced to every accepting attribute, normalized with the DuckDB
+    render of each attribute's compiled normalizer (seed_ctes expects
+    NORMALIZED values, e.g. a dd/MM/yyyy date in canonical form;
+    cross-engine normalizer identity is pinned by tests/test_dialect.py)."""
     import duckdb
-    con = duckdb.connect()
+    from zentity_spark.input import term_accepts
+    raw: dict = {}
+    for a, vs in (attributes or {}).items():
+        raw.setdefault(a, []).extend(str(v) for v in vs)
+    for t in terms or ():
+        for a, spec in plan.model.attributes.items():
+            if term_accepts(spec, str(t)):
+                raw.setdefault(a, []).append(str(t))
     probe: dict = {}
-    for a, vs in attrs.items():
+    con = duckdb.connect()
+    for a, vs in raw.items():
         expr = plan.norm_sql(a, "c", D.DUCKDB)
-        rows = ", ".join("('" + str(v).replace("'", "''") + "')" for v in vs)
+        rows = ", ".join("('" + v.replace("'", "''") + "')" for v in set(vs))
         got = con.execute(
             f"SELECT DISTINCT {expr} AS v FROM (VALUES {rows}) AS t(c)"
         ).fetchall()
@@ -471,7 +478,7 @@ def _normalize_probe(plan, attrs: dict) -> dict:
 
 def _oracle_input_seeded() -> str:
     plan = _plan()
-    probe = _normalize_probe(plan, SEED_INPUT)
+    probe = _oracle_probe(plan, attributes=SEED_INPUT)
     return _oracle_bounded_hopq(
         plan, "SELECT doc_id, 0 AS hop, 0 AS q FROM seed_docs_x",
         SEED_INPUT_HOPS, extra_pre=plan.seed_ctes(probe, D.DUCKDB))
@@ -503,7 +510,7 @@ def _oracle2_seeded() -> str:
 
 def _oracle2_input_seeded() -> str:
     plan = _plan2()
-    probe = _normalize_probe(plan, SEED2_INPUT)
+    probe = _oracle_probe(plan, attributes=SEED2_INPUT)
     return _oracle_bounded_hopq(
         plan, "SELECT doc_id, 0 AS hop, 0 AS q FROM seed_docs_x",
         SEED2_INPUT_HOPS, extra_pre=plan.seed_ctes(probe, D.DUCKDB),
@@ -521,7 +528,7 @@ def _oracle2_scoped_clusters() -> str:
 
 def _oracle2_terms_seeded() -> str:
     plan = _plan2()
-    probe = _probe_from_terms(plan, SEED2_TERMS)
+    probe = _oracle_probe(plan, terms=SEED2_TERMS)
     return _oracle_bounded_hopq(
         plan, "SELECT doc_id, 0 AS hop, 0 AS q FROM seed_docs_x",
         SEED2_TERMS_HOPS, extra_pre=plan.seed_ctes(probe, D.DUCKDB),
@@ -545,35 +552,9 @@ def _oracle_scoped_clusters() -> str:
                     extra=extra, recursive=True)
 
 
-def _probe_from_terms(plan, terms) -> dict:
-    """replicate input.build_probe for the ORACLE side: type-coerce terms to
-    accepting attributes and normalize with the DuckDB render of the same
-    normalizer expressions (cross-engine normalizer identity is pinned by
-    tests/test_dialect.py)."""
-    import duckdb
-    from zentity_spark.input import term_accepts
-    raw: dict = {}
-    for t in terms:
-        for a, spec in plan.model.attributes.items():
-            if term_accepts(spec, str(t)):
-                raw.setdefault(a, []).append(str(t))
-    probe: dict = {}
-    con = duckdb.connect()
-    for a, vs in raw.items():
-        expr = plan.norm_sql(a, "c", D.DUCKDB)
-        rows = ", ".join("('" + v.replace("'", "''") + "')" for v in set(vs))
-        got = con.execute(
-            f"SELECT DISTINCT {expr} AS v FROM (VALUES {rows}) AS t(c)"
-        ).fetchall()
-        vals = sorted(r[0] for r in got if r[0])
-        if vals:
-            probe[a] = vals
-    return probe
-
-
 def _oracle_terms_seeded() -> str:
     plan = _plan()
-    probe = _probe_from_terms(plan, SEED_TERMS)
+    probe = _oracle_probe(plan, terms=SEED_TERMS)
     return _oracle_bounded_hopq(
         plan, "SELECT doc_id, 0 AS hop, 0 AS q FROM seed_docs_x",
         SEED_TERMS_HOPS, extra_pre=plan.seed_ctes(probe, D.DUCKDB))

@@ -108,10 +108,9 @@ def main() -> None:
         timed("extract_attributes", lambda: job2.attrs().count())
         timed("blocking_keys", lambda: job2.keys().count())
         timed("candidate_pairs", lambda: job2.candidate_pairs().count())
-        edges = job2.match_edges()
-        timed("match_edges", lambda: edges.cache().count())
-        timed("connected_components", lambda: job2.clusters(edges).count())
-        edges.unpersist()
+        # match_edges writes the edge stage, clusters() then runs CC over it
+        timed("match_edges", lambda: job2.match_edges().count())
+        timed("connected_components", lambda: job2.clusters().count())
         job2.unpersist()
 
     assert n_out == n_docs, f"output rows {n_out} != input docs {n_docs}"

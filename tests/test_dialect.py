@@ -124,24 +124,41 @@ def test_lev_within_auto(spark):
     assert got == [True, False, True, False, True]
 
 
-def test_token_overlap(spark):
-    got = _pair_eval(spark, D.token_overlap, [
+def _matcher_pair(model, kind, **params):
+    """pair builder for the match flag the compiler emits for one matcher
+    over two one-element value lists (CompiledPlan._derive → _cmp) — the
+    predicate the pipeline's verify stage runs."""
+    from zentity_spark.model import Matcher
+    from zentity_spark.plans.compiler import compile_model
+    plan = compile_model(model)
+    m = Matcher("m", kind, params=params)
+
+    def build(a, b, dialect):
+        arr = "list_value" if dialect == D.DUCKDB else "array"
+        la = plan._derive(m, f"{arr}({a})", dialect)
+        lb = plan._derive(m, f"{arr}({b})", dialect)
+        return plan._cmp(m, la, lb, dialect)
+    return build
+
+
+def test_token_overlap(spark, model):
+    got = _pair_eval(spark, _matcher_pair(model, "tokens"), [
         ("john smith", "smith house"),
         ("john smith", "maria garcia"),
     ])
     assert got == [True, False]
 
 
-def test_phonetic_token_eq(spark):
-    got = _pair_eval(spark, D.phonetic_token_eq, [
+def test_phonetic_token_eq(spark, model):
+    got = _pair_eval(spark, _matcher_pair(model, "phonetic", operator="or"), [
         ("john smith", "jon smyth"),
         ("john smith", "maria garcia"),
     ])
     assert got == [True, False]
 
 
-def test_date_within(spark):
-    got = _pair_eval(spark, lambda a, b, d: D.date_within(a, b, 2, d), [
+def test_date_within(spark, model):
+    got = _pair_eval(spark, _matcher_pair(model, "date_window", window="2d"), [
         ("1984-03-02", "1984-03-04"),
         ("1984-03-02", "1984-03-09"),
         ("1984-03-02", "1984-03-02"),

@@ -24,33 +24,52 @@ def _labels(df):
 
 def test_checkpointed_matches_direct(spark, docs_sf0001, model, ckpt):
     job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
-    got = _labels(job.run_checkpointed())
+    got = _labels(job.clusters())
     direct = _labels(ResolutionJob(spark, docs_sf0001, model).clusters())
     assert got == direct
 
 
 def test_resume_skips_completed_stages(spark, docs_sf0001, model, ckpt):
     job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
-    first = _labels(job.run_checkpointed())
+    first = _labels(job.clusters())
 
     # "kill after edges": drop the final stage output, keep the rest
-    shutil.rmtree(os.path.join(ckpt, "clusters"))
+    shutil.rmtree(os.path.join(ckpt, "labels"))
     attrs_mtime = os.path.getmtime(os.path.join(ckpt, "attrs_x", "_SUCCESS"))
-    edges_mtime = os.path.getmtime(os.path.join(ckpt, "edges", "_SUCCESS"))
+    edges_mtime = os.path.getmtime(os.path.join(ckpt, "explain_x", "_SUCCESS"))
 
     job2 = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
-    second = _labels(job2.run_checkpointed())
+    second = _labels(job2.clusters())
     assert second == first
     # completed stages untouched (skipped, not recomputed)
     assert os.path.getmtime(
         os.path.join(ckpt, "attrs_x", "_SUCCESS")) == attrs_mtime
     assert os.path.getmtime(
-        os.path.join(ckpt, "edges", "_SUCCESS")) == edges_mtime
+        os.path.join(ckpt, "explain_x", "_SUCCESS")) == edges_mtime
+
+
+def test_warm_stage_dir_serves_labels(spark, docs_sf0001, model, tmp_path,
+                                      monkeypatch):
+    """a job opening a warm stage dir reads the labels stage the first
+    job wrote: no connected components run, the stage is not rewritten."""
+    import zentity_spark.pipeline as pl
+    base = str(tmp_path / "stages")
+    job = ResolutionJob(spark, docs_sf0001, model).cache_stages_under(base)
+    first = _labels(job.clusters())
+    done = os.path.join(job._ckpt_dir, "labels", "_SUCCESS")
+    mtime = os.path.getmtime(done)
+
+    def no_cc(*a, **k):
+        raise AssertionError("connected components ran on a warm dir")
+    monkeypatch.setattr(pl, "connected_components_by_hash", no_cc)
+    job2 = ResolutionJob(spark, docs_sf0001, model).cache_stages_under(base)
+    assert _labels(job2.clusters()) == first
+    assert os.path.getmtime(done) == mtime
 
 
 def test_metrics_lineage_written(spark, docs_sf0001, model, ckpt):
     job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
-    job.run_checkpointed()
+    job.clusters()
     with open(os.path.join(ckpt, "metrics.jsonl")) as f:
         rows = [json.loads(line) for line in f]
     stages = [r["stage"] for r in rows]
@@ -58,8 +77,8 @@ def test_metrics_lineage_written(spark, docs_sf0001, model, ckpt):
     # ck_* stages appear only when the skew policy keeps a resolver's
     # cap/salt machinery (the fixture corpus is provably under-threshold)
     assert {"attrs_x", "keys_x", "vals_wide_x",
-            "edges", "clusters"} <= set(stages)
-    assert stages[0] == "attrs_x" and stages[-1] == "clusters"
+            "explain_x", "labels"} <= set(stages)
+    assert stages[0] == "attrs_x" and stages[-1] == "labels"
     assert all(r["rows_out"] > 0 and r["wall_ms"] > 0 for r in rows)
 
 
@@ -68,11 +87,11 @@ def test_stale_checkpoint_refused(spark, docs_sf0001, model, ckpt):
     scope / block_cap / input files) must refuse, not silently join stale
     stage parquet against the new inputs (ADVICE round 1)."""
     job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
-    job.run_checkpointed()
+    job.clusters()
     job2 = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt,
                          block_cap=7)
     with pytest.raises(ValueError, match="fingerprint"):
-        job2.run_checkpointed()
+        job2.clusters()
 
 
 def test_unpersist_removes_owned_scratch_dir(spark, docs_sf0001, model):
@@ -88,9 +107,9 @@ def test_unpersist_removes_owned_scratch_dir(spark, docs_sf0001, model):
 
 def test_unpersist_keeps_user_checkpoint_dir(spark, docs_sf0001, model, ckpt):
     job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
-    job.run_checkpointed()
+    job.clusters()
     job.unpersist()
-    assert os.path.exists(os.path.join(ckpt, "clusters"))
+    assert os.path.exists(os.path.join(ckpt, "labels"))
 
 
 def test_fingerprint_covers_wide_cc_ids(spark):

@@ -84,17 +84,13 @@ def test_s4_batch_cluster(spark, model):
 def test_s4_seeded_max_hops(spark, model):
     docs = make_docs(spark, S4_SPEC)
     job = ResolutionJob(spark, docs, model)
-    edges = job.match_edges().cache()
-    edges.count()
 
     full = {r["doc_id"]: r["hop"] for r in
-            job.resolve_input(ids=["a-000001"], max_hops=10,
-                              edges=edges).collect()}
+            job.resolve_input(ids=["a-000001"], max_hops=10).collect()}
     assert full == {"a-000001": 0, "b-000001": 1, "c-000001": 2, "d-000001": 3}
 
     h1 = {r["doc_id"]: r["hop"] for r in
-          job.resolve_input(ids=["a-000001"], max_hops=1,
-                            edges=edges).collect()}
+          job.resolve_input(ids=["a-000001"], max_hops=1).collect()}
     assert h1 == {"a-000001": 0, "b-000001": 1}
 
 

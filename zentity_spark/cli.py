@@ -38,7 +38,9 @@ def _common(ap: argparse.ArgumentParser) -> None:
     ap.add_argument("--block-cap", type=int, default=1000)
     ap.add_argument("--include-resolver", action="append", default=[])
     ap.add_argument("--exclude-resolver", action="append", default=[])
-    ap.add_argument("--checkpoint-dir", default=None)
+    ap.add_argument("--checkpoint-dir", default=None,
+                    help="stage dir; a re-run over it resumes from the "
+                         "last completed stage")
 
 
 def _job(args) -> ResolutionJob:
@@ -84,8 +86,7 @@ def main(argv=None) -> int:
 
     job = _job(args)
     if args.cmd == "resolve":
-        out = (job.run_checkpointed() if args.checkpoint_dir
-               else job.clusters())
+        out = job.clusters()
     else:
         attributes: dict = {}
         for kv in args.attr:

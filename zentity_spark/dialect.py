@@ -413,30 +413,6 @@ def lev_within(a: str, b: str, k: int, dialect: str) -> str:
     return f"(levenshtein({a}, {b}) <= {k})"
 
 
-def date_within(a: str, b: str, window_days: int, dialect: str) -> str:
-    """date-window range matcher (SURVEY §3 row 12): |a-b| ≤ window."""
-    return f"(abs({epoch_day(a, dialect)} - {epoch_day(b, dialect)}) <= {window_days})"
-
-
-def token_overlap(a: str, b: str, dialect: str) -> str:
-    """analyzed ``match`` parity (SURVEY §3 row 8): ≥1 shared token."""
-    ta, tb = tokens(a, dialect), tokens(b, dialect)
-    if dialect == DUCKDB:
-        return f"(len(list_intersect({ta}, {tb})) > 0)"
-    return f"(size(array_intersect({ta}, {tb})) > 0)"
-
-
-def phonetic_token_eq(a: str, b: str, dialect: str) -> str:
-    """phonetic match parity (SURVEY §3 row 10): ≥1 token pair with equal
-    phonetic code (≙ ES ``match`` on a phonetic-analyzed subfield: OR over
-    query tokens against the phonetic token index)."""
-    pha = _phonetic_token_list(a, dialect)
-    phb = _phonetic_token_list(b, dialect)
-    if dialect == DUCKDB:
-        return f"(len(list_intersect({pha}, {phb})) > 0)"
-    return f"(size(array_intersect({pha}, {phb})) > 0)"
-
-
 def _phonetic_token_list(c: str, dialect: str) -> str:
     t = tokens(c, dialect)
     inner = phonetic_code("x", dialect)

@@ -63,18 +63,10 @@ def broadcast_row_budget(spark, avg_key_bytes: float) -> int:
                              + _BROADCAST_ROW_OVERHEAD)))
 
 
-def _id_stats(df: DataFrame, col: str = "doc_id"):
-    """(row count, avg id byte width) in ONE job over a (checkpointed,
-    usually tiny) relation — feeds broadcast_row_budget."""
-    r = df.agg(F.count(F.lit(1)).alias("n"),
-               F.avg(F.length(col)).alias("w")).collect()[0]
-    return int(r["n"]), float(r["w"] if r["w"] is not None else 8.0)
-
-
 def _checkpoint_id_stats(df: DataFrame, col: str = "doc_id"):
-    """(localCheckpoint of df, row count, avg id byte width): the stats
-    ride on the checkpoint job itself via an Observation — no second job
-    over the relation."""
+    """(localCheckpoint of df, row count, avg id byte width) — feeds
+    broadcast_row_budget.  The stats ride on the checkpoint job itself via
+    an Observation — no second job over the relation."""
     from pyspark.sql import Observation
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("n"),

@@ -63,7 +63,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from zentity_spark import dialect as D
 from zentity_spark.io import FoldState, Storage
 from zentity_spark.model import Model
-from zentity_spark.operators.cluster import (_id_stats, broadcast_row_budget,
+from zentity_spark.operators.cluster import (_checkpoint_id_stats,
+                                             broadcast_row_budget,
                                              connected_components_by_hash)
 from zentity_spark.pipeline import DEFAULT_SCOPE, ResolutionJob
 from zentity_spark.plans.compiler import Scope
@@ -260,9 +261,9 @@ class IncrementalResolver(FoldState):
         # autoBroadcastJoinThreshold (rows × measured id width — ADVICE r3:
         # a fixed 1M-row cap hinted wide-id relations past the planner's
         # size check); a too-large Δ falls back to a shuffle join.
-        n_new, id_w = _id_stats(new_docs)
+        new_ids, n_new, id_w = _checkpoint_id_stats(new_docs.select("doc_id"))
         v_new = f"{job._view}_newids"
-        new_docs.select("doc_id").createOrReplaceTempView(v_new)
+        new_ids.createOrReplaceTempView(v_new)
         bcast = n_new <= broadcast_row_budget(spark, id_w)
         plan = job.plan
         delta_select = " UNION ALL ".join(

@@ -5,6 +5,11 @@ Stages (§3c): extract → blocking keys → composite candidate pairs → verif
 match edges (all compiled SQL from plans/compiler.py, pure JVM codegen) →
 connected components (operators/cluster.py) → cluster output with span
 passthrough.
+
+One batch path: ``ResolutionJob.clusters()``.  Every stage it writes lands
+in the job's stage dir (per-stage ``_SUCCESS`` markers + a
+``metrics.jsonl`` lineage row each), so the same call with a
+``checkpoint_dir`` is the resumable run (SURVEY §5.3).
 """
 
 from __future__ import annotations
@@ -86,6 +91,11 @@ class ResolutionJob:
     # first reader (_edge_stage), never by the default levels: neither a
     # stage-cache warm nor the fold's Δ-local job reads edges.
     EDGE_STAGE = "explain_x"
+
+    # the connected-component labels (doc_id, entity_id) of edge-bearing
+    # docs — the fold state's ``labels`` schema.  Written by the first
+    # clusters() call on top of EDGE_STAGE.
+    LABEL_STAGE = "labels"
 
     def _ck_level(self):
         # only resolvers whose pair plan keeps the skew machinery
@@ -210,7 +220,9 @@ class ResolutionJob:
         persisted skew statistic, the dir holds the edge-and-explanation
         stage (``EDGE_STAGE``), written by the first job that reads
         edges, scores or explanations — later jobs run no pair or verify
-        plan.  The dir is NOT owned (never auto-deleted by unpersist) —
+        plan — and the component labels (``LABEL_STAGE``), written by the
+        first clusters() call — later jobs run no connected components.
+        The dir is NOT owned (never auto-deleted by unpersist) —
         callers manage ``base``'s lifetime."""
         os.makedirs(base, exist_ok=True)
         self._ckpt_dir = os.path.join(base, self.fingerprint())
@@ -256,7 +268,7 @@ class ResolutionJob:
             with open(fp_path, "w") as f:
                 f.write(fp)
 
-    # ---------- checkpointed execution (SURVEY §5.3 resume/lineage, M7) ----------
+    # ---------- stage writes (SURVEY §5.3 resume/lineage, M7) ----------
 
     def _write_stage(self, name: str, df: DataFrame) -> None:
         """write one stage under the stage dir and append its lineage row
@@ -276,35 +288,14 @@ class ResolutionJob:
                 "ts": _t.time()}) + "\n")
 
     def _ckpt_stage(self, name: str, build) -> DataFrame:
-        """idempotent stage materialization: skip when the stage's parquet
-        is complete (_SUCCESS), else compute, write, and record lineage.
+        """idempotent stage materialization: skip when the stage is
+        complete (_SUCCESS), else compute, write, and record lineage.
         The restart contract: overwrite-by-stage, so a killed run resumes
         from the last completed stage with identical results."""
         path = os.path.join(self._ckpt_dir, name)
         if not self.storage.complete(path):
             self._write_stage(name, build())
         return self.storage.read(path)
-
-    def run_checkpointed(self) -> DataFrame:
-        """full batch resolution with EVERY major stage materialized to
-        ``checkpoint_dir`` + a ``metrics.jsonl`` lineage log — the batch
-        analog of a resumable job (the reference's jobs are in-heap and
-        not resumable, SURVEY §5.2; this is our deliberate strengthening).
-        """
-        if self._ckpt_dir is None:
-            raise ValueError("run_checkpointed requires checkpoint_dir")
-        os.makedirs(self._ckpt_dir, exist_ok=True)
-        self.materialize()              # attrs_x / keys_x / vals_x
-        edges = self._ckpt_stage("edges", self.match_edges)
-        labels = self._ckpt_stage(
-            "clusters",
-            lambda: self.clusters(edges).select("doc_id", "entity_id"))
-        return (
-            self.docs.join(labels, "doc_id", "left")
-            .select("doc_id",
-                    F.coalesce("entity_id", "doc_id").alias("entity_id"),
-                    "spans")
-        )
 
     def attrs(self) -> DataFrame:
         return self.stage(
@@ -368,19 +359,25 @@ class ResolutionJob:
                 "resolver", "attr", "field", "matcher", "other_doc", "s"
             ))).alias("explanation"))
 
-    def clusters(self, edges: DataFrame | None = None) -> DataFrame:
+    def clusters(self) -> DataFrame:
         """(doc_id, entity_id, spans): every input doc labeled; docs in no
         component become singletons (entity_id = own doc_id); spans pass
-        through untouched (per-row span-sequence invariant)."""
-        if edges is None:
+        through untouched (per-row span-sequence invariant).
+
+        The component labels of edge-bearing docs are ``LABEL_STAGE`` of
+        the stage dir, written by the first call on top of the edge stage
+        — so with a ``checkpoint_dir`` this IS the resumable batch run, and
+        a job opening a warm dir runs no connected components."""
+        # the edge stage first: it opens and fingerprint-checks the dir
+        edges = self.match_edges()
+        labels = self._ckpt_stage(
+            self.LABEL_STAGE,
             # checkpoint: connected_components_by_hash consumes the edge
             # relation twice (hashed CC input + the nodes/label-restore
             # join) — one distinct over the edge stage, not two
-            edges = self.match_edges() \
-                .select("doc_id_a", "doc_id_b").localCheckpoint()
-        labels = connected_components_by_hash(
-            edges.select("doc_id_a", "doc_id_b"),
-            wide_ids=self.wide_cc_ids)
+            lambda: connected_components_by_hash(
+                edges.select("doc_id_a", "doc_id_b").localCheckpoint(),
+                wide_ids=self.wide_cc_ids))
         return (
             self.docs.join(labels, "doc_id", "left")
             .select(
@@ -400,9 +397,7 @@ class ResolutionJob:
         # without it the full keys/vals derivation SQL inlines per CTE
         # reference and Catalyst analysis dominates the seeded query
         self.materialize()
-        df = self.spark.sql(self.plan.sql(
-            D.SPARK, self._view, "SELECT doc_id FROM seed_docs_x",
-            extra=extra, replace=dict(self._replace)))
+        df = self.stage("SELECT doc_id FROM seed_docs_x", extra=extra)
         # localCheckpoint: truncate the union-heavy seed plan NOW — letting
         # it flow into the label-propagation loop trips a Spark 4 constraint
         # rewrite bug (UnionBase.rewriteConstraints NoSuchElementException)
@@ -421,11 +416,15 @@ class ResolutionJob:
 
     def resolve_input(self, attributes=None, terms=None, ids=None,
                       max_hops: int = 100,
-                      max_time_per_query: float | None = None,
-                      edges: DataFrame | None = None) -> DataFrame:
+                      max_time_per_query: float | None = None) -> DataFrame:
         """full analog of ``POST _zentity/resolution/{type}`` input handling:
         seeds from attributes+terms (first-hop matching) and/or explicit
         ids, then bounded snowball → (doc_id, hop, q)."""
+        if not (attributes or terms or ids):
+            raise ValueError("resolution input needs attributes, terms or ids")
+        # the edge stage before the seed probe: a cold dir's stage writes
+        # land under match_edges (the request's pair/verify cost)
+        edges = self._edges_q(self.match_edges())
         seeds = None
         if attributes or terms:
             seeds = self.seed_docs(attributes, terms)
@@ -433,13 +432,8 @@ class ResolutionJob:
             ids_df = self.spark.createDataFrame(
                 [(s,) for s in ids], "doc_id string")
             seeds = ids_df if seeds is None else seeds.union(ids_df).distinct()
-        if seeds is None:
-            raise ValueError("resolution input needs attributes, terms or ids")
-        if edges is None:
-            edges = self.match_edges()
         return bounded_label_propagation(
-            self._edges_q(edges), seeds, max_hops=max_hops,
-            max_time_s=max_time_per_query)
+            edges, seeds, max_hops=max_hops, max_time_s=max_time_per_query)
 
     def attributes_map(self, doc_ids: DataFrame | None = None) -> DataFrame:
         """(doc_id, attributes map<attr, array<value>>) — the harvested
@@ -489,11 +483,10 @@ class ResolutionJob:
         stage (``EDGE_STAGE``): the first request against a stage dir
         writes it, every later one (under ``cache_stages_under``) runs no
         pair or verify plan."""
-        edges = self.match_edges()
         hits = self.resolve_input(attributes=attributes, terms=terms,
                                   ids=ids, max_hops=max_hops,
-                                  max_time_per_query=max_time_per_query,
-                                  edges=edges).localCheckpoint()
+                                  max_time_per_query=max_time_per_query
+                                  ).localCheckpoint()
         ids_df = hits.select("doc_id")
         out = hits.select("doc_id", F.col("hop").cast("int").alias("hop"),
                           F.col("q").cast("int").alias("q"))
