@@ -64,6 +64,21 @@ def docs_sf0001(spark, sf0001_dir):
     return spark.read.parquet(os.path.join(sf0001_dir, "docs_spans.parquet"))
 
 
+@pytest.fixture()
+def spark_cc_calls(monkeypatch):
+    """one entry per call of the hashed Spark star loop
+    (``cluster.connected_components``) made during the test."""
+    from zentity_spark.operators import cluster
+    calls = []
+    real = cluster.connected_components
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+    monkeypatch.setattr(cluster, "connected_components", spy)
+    return calls
+
+
 def make_docs(spark, spec):
     """spec: [(doc_id, [(field, value), ...])] → interleaved docs DataFrame.
 

@@ -3,6 +3,7 @@ union-find oracle (SURVEY.md §6.2 item 5): random graphs via hypothesis,
 plus hand-built hop-semantics cases (max_hops parity, SURVEY §8 R2).
 """
 
+import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from zentity_spark.operators.cluster import (
@@ -144,3 +145,90 @@ def test_cc_wide_ids_salt_first_independence(spark):
     import inspect
     src = inspect.getsource(connected_components_by_hash)
     assert "xxhash64(1, {c})" in src and "xxhash64({c}, 1)" not in src
+
+
+# ---------------------------------------------------------------------------
+# connected_components_by_hash: driver union-find vs the hashed Spark loop
+# ---------------------------------------------------------------------------
+
+# node names whose code-point (= UTF-8 byte) order differs from a
+# case-folded or UTF-16 order: "Z" < "a" < "ab" < "é" < "￿" < astral
+_IDS = ["Z", "a", "ab", "é", "￿", "\U0001F600", "\U0001F600a",
+        "n-0", "n-00", "n-1", "0", "éa"]
+
+_ids_edges = st.lists(
+    st.tuples(st.one_of(st.integers(0, len(_IDS) - 1), st.none()),
+              st.integers(0, len(_IDS) - 1)),
+    min_size=0, max_size=20)
+
+
+def _labels_by_hash(session, pairs, wide_ids=False):
+    from zentity_spark.operators.cluster import connected_components_by_hash
+    df = session.createDataFrame(pairs, "doc_id_a string, doc_id_b string")
+    return {r["doc_id"]: r["entity_id"] for r in
+            connected_components_by_hash(df, wide_ids=wide_ids).collect()}
+
+
+def _uf_labels(idx_edges):
+    """expected labels: each member of a multi-node component → its
+    minimum id string (null ends dropped, as _canon does)."""
+    kept = [(a, b) for a, b in idx_edges if a is not None]
+    comps = _uf_components(len(_IDS), kept)
+    out = {}
+    for c in comps:
+        names = [_IDS[int(n[1:])] for n in c]
+        out.update({x: min(names) for x in names})
+    return out
+
+
+@pytest.fixture(scope="module")
+def no_broadcast(spark):
+    s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    return s
+
+
+@pytest.mark.parametrize("wide_ids", [False, True])
+@settings(max_examples=6, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(idx_edges=_ids_edges)
+def test_cc_by_hash_local_equals_spark(spark, no_broadcast, spark_cc_calls,
+                                       wide_ids, idx_edges):
+    # duplicate and reversed copies of every edge, plus a self-loop
+    idx = idx_edges + [(b, a) for a, b in idx_edges if a is not None]
+    idx = idx + idx[:3] + [(1, 1)]
+    pairs = [(None if a is None else _IDS[a], _IDS[b]) for a, b in idx]
+    expect = _uf_labels(idx)
+    spark_cc_calls.clear()
+    assert _labels_by_hash(spark, pairs, wide_ids) == expect
+    assert spark_cc_calls == [], "default session left the driver path"
+    assert _labels_by_hash(no_broadcast, pairs, wide_ids) == expect
+    assert spark_cc_calls == [1], "disabled auto-broadcast kept the driver path"
+
+
+def test_cc_by_hash_over_budget_runs_spark_loop(spark, spark_cc_calls):
+    """a graph with more edge rows than the byte budget admits falls back
+    to the Spark loop, with the same labels."""
+    from zentity_spark.operators import cluster
+    s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "1000")
+    chain = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(39)]
+    assert cluster.broadcast_row_budget(s, cluster._LABEL_ID_BYTES) \
+        < len(chain)
+    local = _labels_by_hash(spark, chain)
+    assert spark_cc_calls == []
+    assert _labels_by_hash(s, chain) == local
+    assert spark_cc_calls == [1]
+    assert set(local.values()) == {"n000"} and len(local) == 40
+
+
+def test_cc_local_plans_local_relation(spark):
+    """the driver path's labels are an Arrow-built LocalRelation: a
+    DataFrame from Python rows would plan a LogicalRDD over a PythonRDD,
+    whose actions start pyspark.worker processes."""
+    from zentity_spark.operators.cluster import connected_components_by_hash
+    df = spark.createDataFrame([("b", "a"), ("c", "b")],
+                               "doc_id_a string, doc_id_b string")
+    plan = connected_components_by_hash(df)._jdf.queryExecution() \
+        .analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan

@@ -47,15 +47,6 @@ def test_scan_sql_and_complete(spark, tmp_path):
     assert st.exists(loc) and not st.complete(loc)
 
 
-def test_overwrite_atomic_replaces(spark, tmp_path):
-    st = Storage(spark)
-    loc = str(tmp_path / "t")
-    st.overwrite_atomic(spark.range(3).selectExpr("id AS a"), loc)
-    st.overwrite_atomic(spark.range(7).selectExpr("id AS a"), loc)
-    assert st.read(loc).count() == 7
-    assert not os.path.exists(loc + "__next")
-
-
 def test_catalog_format_scan_sql(spark):
     st = Storage(spark, fmt="iceberg")
     assert not st.file_based

@@ -4,7 +4,9 @@ DuckDB at sf=0.01 (order-insensitive, columns sorted by name — the driver's
 compare contract).
 """
 
+import functools
 import math
+import shutil
 
 import duckdb
 import pytest
@@ -29,6 +31,9 @@ TESTDATA_TABLES = ("region", "nation", "customer", "supplier", "part",
                    "orders", "lineitem", "events", "documents", "embeddings")
 
 
+# cached: the Spark-path test below compares against the same clustering
+# oracles as the gate, and each recursive-CTE oracle costs ~10-30 s
+@functools.cache
 def _duck_rows(sql):
     con = duckdb.connect()
     # the driver pre-registers one view per testdata table
@@ -63,3 +68,35 @@ def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     assert df.count() > 0
     assert set(df.columns) == {"doc_id", "entity_id", "spans"}
+
+
+CLUSTER_QUERIES = ("er_clusters", "er_clusters_wide128", "er_cluster_sizes",
+                   "er_increment_clusters", "er_scoped_clusters",
+                   "er2_clusters", "er2_cluster_sizes",
+                   "er2_increment_clusters", "er2_scoped_clusters")
+
+
+@pytest.fixture(scope="module")
+def spark_path_cache(tmp_path_factory):
+    return tmp_path_factory.mktemp("spark_path_stages")
+
+
+@pytest.mark.parametrize("name", CLUSTER_QUERIES)
+def test_cluster_query_spark_path_matches_oracle(spark, oracle, name,
+                                                 spark_path_cache,
+                                                 spark_cc_calls, monkeypatch):
+    """the sf0.01 match graphs fit the driver budget, so the gate above
+    only runs the driver union-find.  With auto-broadcast disabled the
+    budget is 0 and connected_components_by_hash runs its hashed Spark
+    star loop (128-bit ids for er_clusters_wide128).  The stage cache is
+    this test's own, and its ``labels`` stages are dropped before each
+    query, so a warm label stage cannot answer without CC; the other
+    stages are shared by the queries of one job fingerprint."""
+    for labels in spark_path_cache.glob("*/labels"):
+        shutil.rmtree(labels)
+    monkeypatch.setattr(entry_mod, "_STAGE_CACHE_BASE", str(spark_path_cache))
+    s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    rows = _spark_rows(entry_mod.queries()[name](s, SF_DIR))
+    assert spark_cc_calls, f"{name}: the Spark star loop never ran"
+    assert rows == _duck_rows(oracle[name])

@@ -12,10 +12,9 @@ Iceberg by constructing ``Storage(spark, fmt="iceberg")`` or exporting
 
   * reads/writes route through ``DataFrameReader/Writer.format(fmt)``;
   * "locations" are catalog table identifiers instead of paths —
-    ``scan_sql`` returns the identifier verbatim and completeness /
-    atomic-replace delegate to the catalog's snapshot commit (Iceberg
-    commits are atomic by design, so ``overwrite_atomic`` is a plain
-    overwrite there);
+    ``scan_sql`` returns the identifier verbatim and completeness
+    delegates to the catalog's snapshot commit (Iceberg commits are
+    atomic by design);
   * streaming sources/sinks take the same format string.
 
 The swap is tested without the Iceberg jars by running the resume and
@@ -65,22 +64,6 @@ class Storage:
     def write(self, df: DataFrame, loc: str, mode: str = "overwrite") -> None:
         (df.write.format(self.fmt).options(**self.options)
          .mode(mode).save(loc))
-
-    def overwrite_atomic(self, df: DataFrame, loc: str) -> None:
-        """replace ``loc`` so readers never observe a half-written table.
-
-        File formats have no atomic directory overwrite (a crash mid-write
-        leaves readable partial files with no marker), so: write aside,
-        then rename into place.  Catalog formats (Iceberg) commit
-        overwrites as atomic snapshot swaps — plain overwrite suffices."""
-        if not self.file_based:
-            self.write(df, loc, mode="overwrite")
-            return
-        staging = loc.rstrip("/") + "__next"
-        shutil.rmtree(staging, ignore_errors=True)
-        self.write(df, staging, mode="overwrite")
-        shutil.rmtree(loc, ignore_errors=True)
-        os.rename(staging, loc)
 
     # ---------- existence / completeness ----------
 
@@ -147,6 +130,10 @@ class FoldState:
       are dropped after the rename.  A crash between rename and drop
       leaves only incs below ``base_inc``, which no read sees and the
       next compaction removes.
+    * Catalog formats (Iceberg) never prune superseded incs: there is no
+      partition drop here, so a catalog-backed state keeps one partition
+      per fold.  Reads stay correct (they filter to the committed range)
+      while space and listing cost grow with the fold count.
     """
 
     # stages a compacting fold rewrites as one full inc; the compaction

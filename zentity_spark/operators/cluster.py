@@ -11,15 +11,21 @@ and Beyond", SoCC'14 — O(log² n) rounds, shuffle-bounded, skew-tolerant),
 and the seeded ``max_hops`` mode is bounded label propagation (BFS rounds)
 from the seed docs.
 
-Both operate purely on DataFrames; each iteration is one Catalyst job with
-``localCheckpoint()`` to truncate lineage (resume-friendly, no stack-depth
-blowup).
+A match graph small enough to broadcast (the session's own
+``autoBroadcastJoinThreshold``, see ``broadcast_row_budget``) is labelled
+on the driver: one Arrow collect of its edge rows and a union-find
+(``_components_local``) — at fold scale the Spark loop is almost all
+per-job fixed cost.  Larger graphs run the star loop, where each
+iteration is one Catalyst job with ``localCheckpoint()`` to truncate
+lineage (resume-friendly, no stack-depth blowup); the seeded BFS always
+runs on DataFrames.
 """
 
 from __future__ import annotations
 
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 # debug/test hook: when True, per-hop executed plans of the seeded label
@@ -30,6 +36,12 @@ _LAST_HOP_PLANS: list = []
 # estimated broadcast footprint per row beyond the key string itself:
 # UnsafeRow field slots + BytesToBytesMap bucket/pointer slack
 _BROADCAST_ROW_OVERHEAD = 48
+
+# conservative per-row doc_id width for byte-gating relations whose ids
+# are not measured: the fold's delta-label broadcast and the driver CC
+# collect (doc_id strings are ~8-16 bytes in the fixture corpora; real ids
+# are rarely wider than this allowance)
+_LABEL_ID_BYTES = 32.0
 
 
 def _parse_byte_conf(s) -> int:
@@ -199,12 +211,64 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     )
 
 
+def _components_local(edges: DataFrame) -> DataFrame | None:
+    """connected components on the driver, or None when the graph is over
+    budget → labels(doc_id, entity_id = min doc_id of the component).
+
+    The row cap is ``broadcast_row_budget`` at ``_LABEL_ID_BYTES`` per id:
+    the byte gate of the session's own ``autoBroadcastJoinThreshold``, so
+    a user who disabled auto-broadcast (cap 0) keeps the Spark loop.  At
+    most ``cap + 1`` edge rows cross to the driver, as one Arrow table.
+
+    Self-loops and rows with a null end are skipped, as ``_canon`` does.
+    Union by the smaller root keeps each root its component's minimum id;
+    Python's code-point order on str equals the UTF-8 byte order Spark
+    and DuckDB compare strings in.
+
+    The result is built from an Arrow table, so it plans as a
+    ``LocalRelation``.  A DataFrame built from Python rows would plan a
+    ``LogicalRDD`` over a ``PythonRDD`` instead, and every action over it
+    starts ``pyspark.worker`` processes (~60 MB each)."""
+    spark = edges.sparkSession
+    cap = broadcast_row_budget(spark, _LABEL_ID_BYTES)
+    if cap == 0:
+        return None
+    t = edges.select("doc_id_a", "doc_id_b").limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        return None
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in zip(t.column("doc_id_a").to_pylist(),
+                    t.column("doc_id_b").to_pylist()):
+        if a is None or b is None or a == b:
+            continue
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    ids = list(parent)
+    id_type = t.schema.field("doc_id_a").type
+    return spark.createDataFrame(pa.table({
+        "doc_id": pa.array(ids, id_type),
+        "entity_id": pa.array([find(x) for x in ids], id_type)}))
+
+
 def connected_components_by_hash(edges: DataFrame,
                                  max_iter: int = 50,
                                  wide_ids: bool = False) -> DataFrame:
-    """connected components over hashed node ids, canonical labels
-    restored afterwards → labels(doc_id, entity_id = min doc_id string of
-    the component).
+    """edges(doc_id_a, doc_id_b) → labels(doc_id, entity_id = min doc_id
+    string of the component).
+
+    A graph under the driver budget is labelled by ``_components_local``;
+    its ids are compared as strings, so there is nothing to hash or widen.
+    Past the budget the star loop runs over hashed node ids and the
+    canonical labels are restored afterwards.
 
     The star rounds shuffle 8-byte longs instead of doc-id strings — the
     single-socket scaling ceiling here is memory bandwidth on string-heavy
@@ -227,6 +291,14 @@ def connected_components_by_hash(edges: DataFrame,
     field-wise), so the same loop runs over 16-byte struct ids at ~2×
     shuffle width; labels are pinned identical across modes by
     tests/test_cluster.py."""
+    local = _components_local(edges)
+    if local is not None:
+        return local
+    # checkpoint: the loop consumes the edge relation twice (hashed CC
+    # input + the nodes/label-restore join) — one pass over the input.
+    # dropna: xxhash64(NULL) is the seed, not NULL, so a null end would
+    # join every doc it touches into one component
+    edges = edges.select("doc_id_a", "doc_id_b").dropna().localCheckpoint()
     if wide_ids:
         h = lambda c: F.struct(
             F.expr(f"xxhash64({c})").alias("h1"),

@@ -30,7 +30,9 @@ Why increments are cheap:
   * only components TOUCHED by a Δ edge re-cluster: old labels restricted
     to touched entities re-enter connected components as star edges
     (label forest ≡ old connectivity), untouched labels pass through
-    byte-identical.
+    byte-identical.  That graph is a few components, so it is labelled on
+    the driver (one Arrow collect + union-find); only one past the
+    session's broadcast budget runs the Spark star loop.
 
 State layout under ``state_dir`` (the ``inc=<fold_id>`` overwrite
 partitions, the ``CURRENT`` commit and the compaction gate are
@@ -63,7 +65,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from zentity_spark import dialect as D
 from zentity_spark.io import FoldState, Storage
 from zentity_spark.model import Model
-from zentity_spark.operators.cluster import (_checkpoint_id_stats,
+from zentity_spark.operators.cluster import (_LABEL_ID_BYTES,
+                                             _checkpoint_id_stats,
                                              broadcast_row_budget,
                                              connected_components_by_hash)
 from zentity_spark.pipeline import DEFAULT_SCOPE, ResolutionJob
@@ -71,11 +74,6 @@ from zentity_spark.plans.compiler import Scope
 
 # per-document stages whose union across increments equals the batch stage
 PER_DOC_STAGES = ("attrs_x", "keys_x", "vals_wide_x")
-
-# conservative per-row id-width estimate for byte-gating the delta-label
-# broadcast in labels() (doc_id strings are ~8-16 bytes in the fixture
-# corpora; real ids are rarely wider than this allowance)
-_LABEL_ID_BYTES = 32.0
 
 
 def _latest(labels: DataFrame) -> DataFrame:

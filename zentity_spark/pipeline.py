@@ -372,11 +372,8 @@ class ResolutionJob:
         edges = self.match_edges()
         labels = self._ckpt_stage(
             self.LABEL_STAGE,
-            # checkpoint: connected_components_by_hash consumes the edge
-            # relation twice (hashed CC input + the nodes/label-restore
-            # join) — one distinct over the edge stage, not two
             lambda: connected_components_by_hash(
-                edges.select("doc_id_a", "doc_id_b").localCheckpoint(),
+                edges.select("doc_id_a", "doc_id_b"),
                 wide_ids=self.wide_cc_ids))
         return (
             self.docs.join(labels, "doc_id", "left")
