@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -109,7 +110,8 @@ def test_fold_writes_state_once(spark, model, split, tmp_path, monkeypatch):
     assert not os.path.exists(r._path("vals_x"))
     fold = r.committed_fold_id()
     assert r.last_delta_edges == r.storage.read(
-        r._part("edges", fold)).count() > 0
+        r._part("explain_x", fold)).select(
+            "doc_id_a", "doc_id_b", "resolver").distinct().count() > 0
     job = ResolutionJob(spark, base.unionByName(delta), model)
     assert inc == _labels(job.clusters())
     job.unpersist()
@@ -325,3 +327,90 @@ def test_incremental_wide_cc_ids_identical_labels(spark, model, split,
     batch = _labels(job.clusters())
     job.unpersist()
     assert _labels(r.clusters()) == batch
+
+
+# --- requests over a folded state ---
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _stages_read(df):
+    """the stage dirs a DataFrame's plan reads (state or stage dir)."""
+    return {re.search(r"/([^/]+)/(?:inc=\d+/)?[^/]+$", f).group(1)
+            for f in df.inputFiles()}
+
+
+@pytest.fixture(scope="module")
+def served(spark, model, split, folded):
+    """the folded state's request job, a batch job over base ∪ Δ with its
+    edge stage written, and request inputs built from a Δ doc that links
+    to a base doc."""
+    r = folded[0]
+    base, delta = split
+    batch = ResolutionJob(spark, base.unionByName(delta), model)
+    edges = batch.match_edges().collect()
+    d_ids = {x["doc_id"] for x in delta.select("doc_id").collect()}
+    doc = min(a if a in d_ids else b for a, b, _r in edges
+              if (a in d_ids) != (b in d_ids))
+    attrs = batch.attributes_map(
+        batch.docs.where(F.col("doc_id") == doc)).first()["attributes"]
+    inputs = {"ids": {"ids": [doc]},
+              "attributes": {"attributes": {a: list(v)
+                                            for a, v in attrs.items()}},
+              "terms": {"terms": sorted({x for v in attrs.values()
+                                         for x in v})}}
+    job = r.job()
+    yield job, batch, inputs
+    job.unpersist()
+    batch.unpersist()
+
+
+def test_folded_state_serves_batch_relations(served):
+    """the folded state's edges, explanations and scores equal the batch
+    over all folded docs, and read only the edge stage's committed incs."""
+    job, batch, _inputs = served
+    for rel in ("match_edges", "explanations", "pair_scores", "doc_scores"):
+        got = getattr(job, rel)()
+        assert _stages_read(got) == {"explain_x"}, rel
+        assert _sorted_rows(got) == _sorted_rows(getattr(batch, rel)()), rel
+
+
+@pytest.mark.parametrize("kind", ["attributes", "ids", "terms"])
+def test_folded_state_response_equals_batch(served, kind, tmp_path,
+                                            monkeypatch):
+    """response() over the folded state equals the batch response on every
+    column, runs no pair derivation (no keys_x scan) and opens no scratch
+    stage dir."""
+    job, batch, inputs = served
+    args = dict(inputs[kind], include_explanation=True)
+    want = sorted((x.asDict(recursive=True)
+                   for x in batch.response(**args).collect()),
+                  key=lambda x: x["doc_id"])
+    scratch = tmp_path / "scratch"
+    monkeypatch.setenv("ZENTITY_LOCAL_DIR", str(scratch))
+    out = job.response(**args)
+    got = sorted((x.asDict(recursive=True) for x in out.collect()),
+                 key=lambda x: x["doc_id"])
+    assert len(got) > 1 and got == want
+    read = _stages_read(out)
+    assert "explain_x" in read and "keys_x" not in read
+    assert not scratch.exists()
+
+
+def test_folds_leave_no_views_or_checkpoints(spark, model, tmp_path):
+    """a fold drops the temp views it registers and frees its
+    localCheckpoints when it ends: a long-running stream_resolve must not
+    grow the catalog or the block store fold by fold."""
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    def cached():
+        return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
+
+    v0, n0 = views(), cached()
+    r = IncrementalResolver(spark, model, str(tmp_path / "st"))
+    for d in _chain_corpus(spark)[:2]:
+        r.add(d)
+        assert views() <= v0
+        assert cached() <= n0

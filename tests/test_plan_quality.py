@@ -97,3 +97,24 @@ def test_seeded_response_aggregates_hit_set_only(spark, docs_sf0001, model):
     # attributes_map over the hit set returns exactly the hit docs
     ids = df.select("doc_id")
     assert job.attributes_map(ids).count() == n_hits
+
+
+def test_edge_stage_runs_python_flag_once(spark, sf0001_dir):
+    """the account model's Jaro-Winkler flag is a pandas UDF; its edge
+    stage plan evaluates it in ONE ArrowEvalPython node.  The edge
+    condition sits inside the explain_x generator: as a WHERE over the
+    flags it is pushed below the projection and the UDF runs twice."""
+    from zentity_spark.model import Model
+    from zentity_spark.plans.compiler import Scope
+    with open(os.path.join(os.path.dirname(sf0001_dir),
+                           "model_account.json")) as f:
+        model2 = Model.parse(f.read())
+    docs = spark.read.parquet(os.path.join(sf0001_dir, "docs2_spans.parquet"))
+    job = ResolutionJob(spark, docs, model2, scope=Scope())
+    job.materialize()
+    df = job.stage("SELECT * FROM explain_x", upto="explain_x")
+    assert df.collect()  # AQE finalizes the plan on execution
+    final = df._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    job.unpersist()
+    assert final.count("ArrowEvalPython") == 1

@@ -115,3 +115,20 @@ def test_edge_stage_edges_equal_compiled_edges(spark, docs_sf0001, model):
     assert sorted(map(tuple, staged.collect())) == \
         sorted(map(tuple, compiled.collect()))
     job.unpersist()
+
+
+def test_ids_seeds_plan_local_relation(job, monkeypatch):
+    """explicit ids seed the BFS from an Arrow-built LocalRelation: a
+    frame of Python rows would plan a LogicalRDD over a PythonRDD whose
+    first action starts pyspark.worker processes."""
+    from zentity_spark import pipeline
+    seen = []
+    real = pipeline.bounded_label_propagation
+
+    def spy(edges, seeds, **kw):
+        seen.append(seeds)
+        return real(edges, seeds, **kw)
+    monkeypatch.setattr(pipeline, "bounded_label_propagation", spy)
+    assert job.resolve_input(ids=["a-000002"]).count() == 1
+    plan = seen[0]._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" in plan and "LogicalRDD" not in plan

@@ -23,16 +23,20 @@ Why increments are cheap:
   * Δ candidate pairs probe the combined key table with only the new
     docs' composite keys (compiler.sql_pairs_delta), broadcast when the
     increment is small: no shuffle of the old keys, no old×old join;
-  * verification reuses the compiled match_edges plan of the same Δ job,
-    its per-doc stages re-pointed at the combined state and ``pairs_x``
-    at the Δ pair relation; the verified edges are written once and read
-    back;
+  * verification reuses the compiled edge-stage plan (``explain_x``) of
+    the same Δ job, its per-doc stages re-pointed at the combined state
+    and ``pairs_x`` at the Δ pair relation; the verified edges, with
+    their explanation rows, are written once and read back;
   * only components TOUCHED by a Δ edge re-cluster: old labels restricted
     to touched entities re-enter connected components as star edges
     (label forest ≡ old connectivity), untouched labels pass through
     byte-identical.  That graph is a few components, so it is labelled on
     the driver (one Arrow collect + union-find); only one past the
     session's broadcast budget runs the Spark star loop.
+
+The bootstrap is the same fold against an empty committed state: Δ is
+every doc, the batch pair plan (with its skew salting) stands in for the
+Δ probe, and there are no old labels to star in.
 
 State layout under ``state_dir`` (the ``inc=<fold_id>`` overwrite
 partitions, the ``CURRENT`` commit and the compaction gate are
@@ -41,12 +45,21 @@ rows):
     docs/inc=<fold_id>/   ingested documents, ONE subdir per increment
     attrs_x/ keys_x/ vals_wide_x/ ck_<resolver>/  (same inc= layout)
                    per-doc stage rows per increment, each written once
-    edges/inc=<fold_id>/  verified match edges (full edge log ⇒ the
-                   labels can always be rebuilt from scratch)
+    explain_x/inc=<fold_id>/  the batch edge stage's rows for the pairs
+                   verified by that fold: one row per matched (pair,
+                   resolver, attribute, field, matcher) binding; the
+                   edges are its distinct (pair, resolver) projection
+                   (full edge log ⇒ the labels can always be rebuilt)
     labels/inc=<fold_id>/ ONLY the components relabeled by that fold
                    (a compacting fold writes the full label set); the
                    current label of a doc is its row at the HIGHEST
                    committed inc — latest-writer-wins per doc_id
+
+A pair is verified in exactly one fold, so the committed incs of
+``explain_x`` are the batch edge stage over the committed docs (under
+the same ``block_cap`` caveat).  ``IncrementalResolver.job()`` serves
+requests from them: a ``ResolutionJob`` whose stages read the committed
+incs, so ``response()`` over a folded state runs no pair or verify plan.
 
 Every state table is delta-partitioned, so a fold WRITES O(Δ + touched
 components), never O(N) — the labels/seen-ids full rewrite that used to
@@ -102,20 +115,60 @@ class IncrementalResolver(FoldState):
         # here, not only on the batch job (see connected_components_by_hash)
         self.wide_cc_ids = wide_cc_ids
         # observability for tests/operators: executed plan of the last Δ
-        # pair job (asserts the broadcast), last Δ edge count
+        # pair job (asserts the broadcast), the last fold run
         self.last_pairs_plan: str | None = None
-        self.last_delta_edges: int = 0
+        self._last_fold: int | None = None
+
+    @property
+    def last_delta_edges(self) -> int:
+        """verified edges of the last fold run: the distinct (pair,
+        resolver) rows of its edge-stage inc, counted on read so the fold
+        itself does not pay for the counter."""
+        if self._last_fold is None:
+            return 0
+        return (self.storage.read(
+                    self._part(ResolutionJob.EDGE_STAGE, self._last_fold))
+                .select("doc_id_a", "doc_id_b", "resolver")
+                .distinct().count())
 
     # ---------- state helpers ----------
 
-    def _scan(self, stage: str) -> str:
-        return self.storage.scan_sql(self._path(stage))
+    def _stages(self, job: ResolutionJob) -> tuple:
+        """the per-doc stages and composite keys a fold writes per inc."""
+        return PER_DOC_STAGES + tuple(
+            f"ck_{r.name}" for r in job.plan.active_resolvers())
 
-    def _ck_stages(self, job: ResolutionJob) -> tuple:
-        return tuple(f"ck_{r.name}" for r in job.plan.active_resolvers())
+    def _point(self, job: ResolutionJob, stages, hi: int) -> None:
+        """re-point ``job``'s ``stages`` at the state's rows of every inc
+        up to ``hi``: none of them compacts, so the union of those incs IS
+        the stage over the docs folded so far."""
+        for st in stages:
+            job._replace[st] = (
+                f"(SELECT * EXCEPT (inc) FROM "
+                f"{self.storage.scan_sql(self._path(st))} WHERE inc <= {hi})")
 
     def docs(self) -> DataFrame:
         return self.storage.read(self._path("docs")).select("doc_id", "spans")
+
+    def job(self) -> ResolutionJob:
+        """a ``ResolutionJob`` over the committed docs whose per-doc
+        stages, composite keys and edge stage (``explain_x``) read the
+        state's committed incs: ``response()``, ``match_edges()``,
+        ``explanations()``, ``pair_scores()`` and ``doc_scores()`` on it
+        run no pair or verify plan and write nothing.  Labels come from
+        ``clusters()``.  ``unpersist()`` the job when done (it drops the
+        job's docs view)."""
+        cur = self._current()
+        if cur is None:
+            raise ValueError("no increments folded yet")
+        hi = cur["fold_id"]
+        job = ResolutionJob(self.spark,
+                            self._read_range("docs", 0, hi)
+                            .select("doc_id", "spans"),
+                            self.model, self.scope, self.block_cap,
+                            wide_cc_ids=self.wide_cc_ids)
+        self._point(job, self._stages(job) + (ResolutionJob.EDGE_STAGE,), hi)
+        return job
 
     def labels(self) -> DataFrame:
         """current (doc_id, entity_id) for edge-bearing docs (singletons are
@@ -188,11 +241,7 @@ class IncrementalResolver(FoldState):
                 f"— replaying a committed fold would overwrite its state")
         new_docs = new_docs.select("doc_id", "spans")
         self.storage.write(new_docs, self._part("docs", fold_id))
-        # re-read from the state table: one scan source for every
-        # downstream use (and the input plan may be a one-shot stream batch)
-        if committed < 0:
-            return self._bootstrap(self.docs(), fold_id)
-        return self._fold_delta(fold_id)
+        return self._fold(fold_id)
 
     def _write_stage_rows(self, job: ResolutionJob, fold_id: int) -> None:
         """write the increment's per-doc stage rows + composite keys
@@ -202,33 +251,15 @@ class IncrementalResolver(FoldState):
         predecessors just wrote; overwrite mode makes a replayed fold
         replace its own partial output.  The composite keys do not depend
         on the skew policy, so no keys aggregate runs here."""
-        for st in PER_DOC_STAGES + self._ck_stages(job):
+        for st in self._stages(job):
             part = self._part(st, fold_id)
             self.storage.write(job.stage(f"SELECT * FROM {st}", upto=st),
                                part)
             job._replace[st] = self.storage.scan_sql(part)
 
-    def _bootstrap(self, docs: DataFrame, fold_id: int) -> DataFrame:
-        """first increment = the full batch path (keeps the batch plan's
-        skew salting for the one genuinely large job), stages persisted
-        into the state dirs for later increments to union against."""
-        job = ResolutionJob(self.spark, docs, self.model, self.scope,
-                            self.block_cap)
-        self._write_stage_rows(job, fold_id)
-        job._compute_skew_policy()
-        # the compiled edge plan, not match_edges(): the fold never reads
-        # explanations, so it skips writing the edge-and-explanation stage
-        edges = job.stage(
-            "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
-            upto="match_edges_x")
-        self.storage.write(edges, self._part("edges", fold_id))
-        edges = self.storage.read(self._path("edges"))
-        labels = connected_components_by_hash(
-            edges.select("doc_id_a", "doc_id_b"),
-            wide_ids=self.wide_cc_ids)
-        return self._commit_labels(labels, fold_id)
-
-    def _fold_delta(self, fold_id: int) -> DataFrame:
+    def _fold(self, fold_id: int) -> DataFrame:
+        """fold every doc landed since the last committed fold — the
+        bootstrap included (``cur is None``; see the module doc)."""
         spark = self.spark
         cur = self._current()
         # Δ = every doc landed SINCE the last committed fold: the docs
@@ -239,70 +270,87 @@ class IncrementalResolver(FoldState):
         # fold).  doc_ids are globally unique across increments (streaming
         # ingest dedups on doc_id before the sink).
         new_docs = (self.storage.read(self._path("docs"))
-                    .where(F.col("inc") > cur["fold_id"])
+                    .where(F.col("inc") > self.committed_fold_id())
                     .select("doc_id", "spans"))
-
-        # 1. Δ per-doc stage rows written once, into the state
         job = ResolutionJob(spark, new_docs, self.model, self.scope,
                             self.block_cap)
-        self._write_stage_rows(job, fold_id)
+        v_new, v_pairs = f"{job._view}_newids", f"{job._view}_dpairs"
+        held = []  # this fold's localCheckpoints, freed when it ends
+        try:
+            # 1. Δ per-doc stage rows written once, into the state
+            self._write_stage_rows(job, fold_id)
 
-        # 2. the same job re-pointed at the combined state roots — nothing
-        # per-doc recomputes for old docs; the skew policy comes from the
-        # combined keys
-        for st in PER_DOC_STAGES + self._ck_stages(job):
-            job._replace[st] = self._scan(st)
-        job._compute_skew_policy()
+            # 2. the same job re-pointed at the combined state — nothing
+            # per-doc recomputes for old docs; the skew policy comes from
+            # the combined keys
+            self._point(job, self._stages(job), fold_id)
+            job._compute_skew_policy()
 
-        # 3. Δ candidate pairs: probe combined keys with the new ids only.
-        # The Δ-side broadcast is BYTE-gated against the session's own
-        # autoBroadcastJoinThreshold (rows × measured id width — ADVICE r3:
-        # a fixed 1M-row cap hinted wide-id relations past the planner's
-        # size check); a too-large Δ falls back to a shuffle join.
-        new_ids, n_new, id_w = _checkpoint_id_stats(new_docs.select("doc_id"))
-        v_new = f"{job._view}_newids"
-        new_ids.createOrReplaceTempView(v_new)
-        bcast = n_new <= broadcast_row_budget(spark, id_w)
-        plan = job.plan
-        delta_select = " UNION ALL ".join(
-            plan.sql_pairs_delta(r, D.SPARK, v_new, broadcast_new=bcast)
-            for r in plan.active_resolvers())
-        pairs = spark.sql(plan.sql(
-            D.SPARK, job._view, delta_select,
-            upto=plan.last_key_cte(D.SPARK), replace=dict(job._replace)))
-        v_pairs = f"{job._view}_dpairs"
-        pairs.localCheckpoint().createOrReplaceTempView(v_pairs)
-        self.last_pairs_plan = \
-            pairs._jdf.queryExecution().executedPlan().toString()
-        job._replace["pairs_x"] = v_pairs
+            # 3. Δ candidate pairs: probe combined keys with the new ids
+            # only.  The Δ-side broadcast is BYTE-gated against the
+            # session's own autoBroadcastJoinThreshold (rows × measured id
+            # width — ADVICE r3: a fixed 1M-row cap hinted wide-id
+            # relations past the planner's size check); a too-large Δ
+            # falls back to a shuffle join.
+            if cur is not None:
+                new_ids, n_new, id_w = _checkpoint_id_stats(
+                    new_docs.select("doc_id"))
+                held.append(new_ids)
+                new_ids.createOrReplaceTempView(v_new)
+                bcast = n_new <= broadcast_row_budget(spark, id_w)
+                plan = job.plan
+                delta_select = " UNION ALL ".join(
+                    plan.sql_pairs_delta(r, D.SPARK, v_new,
+                                         broadcast_new=bcast)
+                    for r in plan.active_resolvers())
+                pairs = spark.sql(plan.sql(
+                    D.SPARK, job._view, delta_select,
+                    upto=plan.last_key_cte(D.SPARK),
+                    replace=dict(job._replace)))
+                held.append(pairs.localCheckpoint())
+                held[-1].createOrReplaceTempView(v_pairs)
+                self.last_pairs_plan = \
+                    pairs._jdf.queryExecution().executedPlan().toString()
+                job._replace["pairs_x"] = v_pairs
 
-        # 4. verify ONLY the Δ pairs through the compiled edge plan
-        d_edges = job.stage(
-            "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
-            upto="match_edges_x")
-        self.storage.write(d_edges, self._part("edges", fold_id))
-        # read back, not re-derived: the verify plan executes once
-        d_edges = self.storage.read(self._part("edges", fold_id))
-        self.last_delta_edges = d_edges.count()
+            # 4. verify the Δ pairs into this fold's inc of the edge stage
+            # — the stage the batch persists — and read it back: the
+            # verify plan executes once
+            part = self._part(ResolutionJob.EDGE_STAGE, fold_id)
+            self.storage.write(job.stage("SELECT * FROM explain_x",
+                                         upto="explain_x"), part)
+            self._last_fold = fold_id
+            d_edges = self.storage.read(part).select("doc_id_a", "doc_id_b")
 
-        # 5. merge: re-cluster touched components only.  The fold COMMITS
-        # only the relabeled components (every member of a touched
-        # component re-appears in the CC output, star edges ≡ old
-        # connectivity); untouched labels survive at their older incs —
-        # no O(N) label rewrite.
-        old = self.labels().localCheckpoint()
-        d_nodes = (d_edges.select(F.col("doc_id_a").alias("doc_id"))
-                   .union(d_edges.select("doc_id_b")).distinct())
-        touched = (old.join(F.broadcast(d_nodes), "doc_id", "semi")
-                   .select("entity_id").distinct().localCheckpoint())
-        star = (old.join(F.broadcast(touched), "entity_id", "semi")
-                .where(F.col("doc_id") != F.col("entity_id"))
-                .select(F.col("doc_id").alias("doc_id_a"),
-                        F.col("entity_id").alias("doc_id_b")))
-        relabeled = connected_components_by_hash(
-            star.union(d_edges.select("doc_id_a", "doc_id_b")),
-            wide_ids=self.wide_cc_ids)
-        return self._commit_labels(relabeled, fold_id)
+            # 5. merge: re-cluster touched components only.  The fold
+            # COMMITS only the relabeled components (every member of a
+            # touched component re-appears in the CC output, star edges ≡
+            # old connectivity); untouched labels survive at their older
+            # incs — no O(N) label rewrite.
+            if cur is not None:
+                old = self.labels().localCheckpoint()
+                d_nodes = (d_edges.select(F.col("doc_id_a").alias("doc_id"))
+                           .union(d_edges.select("doc_id_b")).distinct())
+                touched = (old.join(F.broadcast(d_nodes), "doc_id", "semi")
+                           .select("entity_id").distinct().localCheckpoint())
+                held += [old, touched]
+                star = (old.join(F.broadcast(touched), "entity_id", "semi")
+                        .where(F.col("doc_id") != F.col("entity_id"))
+                        .select(F.col("doc_id").alias("doc_id_a"),
+                                F.col("entity_id").alias("doc_id_b")))
+                d_edges = star.union(d_edges)
+            relabeled = connected_components_by_hash(
+                d_edges, wide_ids=self.wide_cc_ids).select(
+                    "doc_id", "entity_id").localCheckpoint()
+            held.append(relabeled)
+            return self._commit_labels(relabeled, fold_id)
+        finally:
+            job.unpersist()
+            spark.catalog.dropTempView(v_new)
+            spark.catalog.dropTempView(v_pairs)
+            for df in held:
+                # the checkpoint's blocks, now rather than at a JVM GC
+                df._jdf.logicalPlan().rdd().unpersist(False)
 
     def _commit_labels(self, delta_labels: DataFrame,
                        fold_id: int) -> DataFrame:
@@ -314,8 +362,6 @@ class IncrementalResolver(FoldState):
         bytes.  A compacting fold writes the full current view (older
         committed incs ⊕ this delta) into THIS inc instead."""
         cur = self._current()
-        delta_labels = delta_labels.select("doc_id",
-                                           "entity_id").localCheckpoint()
         d_rows = delta_labels.count()
         compact = self._compact_due(cur, d_rows)
         if compact and cur:

@@ -18,6 +18,7 @@ import os
 import tempfile
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from zentity_spark import dialect as D
@@ -88,8 +89,9 @@ class ResolutionJob:
     # edge has at least one matched binding per resolver attribute, so the
     # distinct (pair, resolver) projection IS the match-edge set — edges,
     # scores and explanations all read this one stage.  Written by the
-    # first reader (_edge_stage), never by the default levels: neither a
-    # stage-cache warm nor the fold's Δ-local job reads edges.
+    # first reader (_edge_stage), never by the default levels (a
+    # stage-cache warm reads no edges); the incremental fold writes it
+    # per increment (``explain_x/inc=<fold_id>``) instead.
     EDGE_STAGE = "explain_x"
 
     # the connected-component labels (doc_id, entity_id) of edge-bearing
@@ -166,11 +168,16 @@ class ResolutionJob:
             # base stages first; the keys statistics then decide which
             # resolvers keep the skew machinery (and need ck materialized)
             self.materialize(self.BASE_LEVELS)
+            if all(f"ck_{r.name}" in self._replace
+                   for r in self.plan.active_resolvers()):
+                return  # every stage the policy could pick is substituted
             self._compute_skew_policy()
             ck = self._ck_level()
             if ck:
                 self.materialize((ck,))
             return
+        if all(st in self._replace for level in stages for st in level):
+            return  # nothing to write: no stage dir to open
         if self._ckpt_dir is None:
             # same safe-scratch base as spark.local.dir (session.py): the
             # sandbox /tmp sweeper that killed blockmgr dirs would equally
@@ -230,9 +237,11 @@ class ResolutionJob:
         return self
 
     def unpersist(self) -> None:
-        """drop stage substitutions and remove the job-owned scratch dir
-        (user-supplied checkpoint dirs are never deleted)."""
+        """drop stage substitutions and the docs view, and remove the
+        job-owned scratch dir (user-supplied checkpoint dirs are never
+        deleted)."""
         self._replace.clear()
+        self.spark.catalog.dropTempView(self._view)
         if self._owns_ckpt_dir and self._ckpt_dir is not None:
             import shutil
             shutil.rmtree(self._ckpt_dir, ignore_errors=True)
@@ -315,8 +324,8 @@ class ResolutionJob:
         pairs of the edge-and-explanation stage."""
         self._edge_stage()
         return self.stage(
-            "SELECT DISTINCT doc_id_a, doc_id_b, resolver FROM explain_x",
-            upto="explain_x")
+            "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x",
+            upto="match_edges_x")
 
     def explanations(self) -> DataFrame:
         """exploded match lineage (pair, resolver, attribute, matcher,
@@ -426,8 +435,10 @@ class ResolutionJob:
         if attributes or terms:
             seeds = self.seed_docs(attributes, terms)
         if ids:
+            # Arrow-built: plans as a LocalRelation; Python rows would plan
+            # a PythonRDD whose first action starts pyspark.worker processes
             ids_df = self.spark.createDataFrame(
-                [(s,) for s in ids], "doc_id string")
+                pa.table({"doc_id": pa.array(list(ids), pa.string())}))
             seeds = ids_df if seeds is None else seeds.union(ids_df).distinct()
         return bounded_label_propagation(
             edges, seeds, max_hops=max_hops, max_time_s=max_time_per_query)

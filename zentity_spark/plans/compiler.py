@@ -12,7 +12,10 @@ pipeline:
       → keys(doc_id, attr, key)                          [per-matcher keys]
       → ck_<resolver>(doc_id, ckey)                      [composite keys]
       → pairs(doc_id_a, doc_id_b, resolver)              [blocked self-join]
-      → match_edges(doc_id_a, doc_id_b [, resolver])     [verified, AND-of-attrs]
+      → flags_<resolver>(doc_id_a, doc_id_b, f_i_j…)     [per-binding flags]
+      → explain(doc_id_a, doc_id_b, resolver, attr, …)   [verified, AND-of-attrs,
+                                                          one row per matched binding]
+      → match_edges(doc_id_a, doc_id_b, resolver)        [distinct of explain]
 
 Design notes (scale):
   * **Composite per-resolver blocking keys.**  A resolver requires ALL of its
@@ -910,40 +913,32 @@ class CompiledPlan:
                 + " OR "
                 + self._cmp(m, f"{wb}.{cs}", f"{wa}.{ca}", dialect) + ")")
 
-    def sql_edges_resolver(self, r, dialect: str) -> str:
-        """verified edges for one resolver, WITH per-(attribute, field,
-        matcher) match-flag lineage columns ``f_{i}_{j}`` (≙ ES named leaf
-        queries + ``matched_queries`` decoding, ``Job.java`` `_name` assembly
+    def sql_flags_resolver(self, r, dialect: str) -> str:
+        """every candidate pair of one resolver WITH its per-(attribute,
+        field, matcher) match flags ``f_{i}_{j}`` (≙ ES named leaf queries
+        + ``matched_queries`` decoding, ``Job.java`` `_name` assembly
         ≈L380-430 & hit loop ≈L1050-1150, SURVEY row 19 — we never erase
         provenance, so there is nothing to decode).  j indexes the
-        attribute's (field, matcher) bindings, sorted."""
+        attribute's (field, matcher) bindings, sorted.  No edge condition
+        here: ``sql_explain`` applies it inside its generator."""
         attr_idx = {a: i for i, a in enumerate(self.scored_attrs())}
-        conds = []
         flags = []
         for i, a in enumerate(r.attributes):
             k = attr_idx[a]
-            m_flags = []
             for j, (fld, _mname, m, _fq) in enumerate(self.attr_bindings(a)):
-                fcol = f"f_{i}_{j}"
-                m_flags.append(fcol)
                 # coalesce: a doc lacking the attribute has a NULL vlist
                 # (wide-vals left shape) and must NOT match
                 flags.append(
                     "coalesce("
                     + self.binding_flag(a, k, fld, m, "wa", "wb", dialect)
-                    + f", FALSE) AS {fcol}")
-            conds.append("(" + " OR ".join(m_flags) + ")")
+                    + f", FALSE) AS f_{i}_{j}")
         # pairs_x is already DISTINCT per resolver branch — no re-dedup
         return (
-            "SELECT * FROM ("
-            f"SELECT p.doc_id_a, p.doc_id_b, {_q(r.name)} AS resolver, "
-            + ", ".join(flags)
-            + f" FROM (SELECT doc_id_a, doc_id_b FROM pairs_x "
-            f"      WHERE resolver = {_q(r.name)}) p"
+            f"SELECT p.doc_id_a, p.doc_id_b, {', '.join(flags)}"
+            f" FROM (SELECT doc_id_a, doc_id_b FROM pairs_x "
+            f"WHERE resolver = {_q(r.name)}) p"
             " JOIN vals_wide_x wa ON wa.doc_id = p.doc_id_a"
-            " JOIN vals_wide_x wb ON wb.doc_id = p.doc_id_b"
-            ") efq WHERE " + " AND ".join(conds)
-        )
+            " JOIN vals_wide_x wb ON wb.doc_id = p.doc_id_b")
 
     # ---------- scoring & explanation (SURVEY rows 26-27, 32; Appendix B) ----------
 
@@ -1011,19 +1006,48 @@ class CompiledPlan:
         identity score PER SIDE (s_a / s_b) — each side scored with its own
         source's declared field quality, the reference's per-index
         granularity (≙ per-hit `target_field` / `input_matcher` entries
-        scored against the hit's index)."""
+        scored against the hit's index).
+
+        One generator pass per resolver over ``flags_<r>``: an array of
+        one struct per binding, filtered to the matched ones, emitted only
+        when the resolver's condition (every attribute matched by some
+        binding) holds.  The condition sits INSIDE the generator: as a
+        ``WHERE`` over the flags, Spark pushes it below the projection and
+        a Python-UDF flag (Jaro-Winkler) is then evaluated twice."""
         parts = []
         for r in self.active_resolvers():
+            structs, conds = [], []
             for i, a in enumerate(r.attributes):
+                fcols = []
                 for j, (fld, mname, _m, _fq) in enumerate(self.attr_bindings(a)):
-                    sa = self._s_side_sql(a, mname, fld, "doc_id_a", dialect)
-                    sb = self._s_side_sql(a, mname, fld, "doc_id_b", dialect)
-                    parts.append(
-                        f"SELECT doc_id_a, doc_id_b, {_q(r.name)} AS resolver, "
-                        f"{_q(a)} AS attr, {_q(fld)} AS field, "
-                        f"{_q(mname)} AS matcher, "
-                        f"{sa} AS s_a, {sb} AS s_b "
-                        f"FROM edges_{r.name} WHERE f_{i}_{j}")
+                    fcol = f"f_{i}_{j}"
+                    fcols.append(fcol)
+                    vals = {
+                        "attr": _q(a), "field": _q(fld), "matcher": _q(mname),
+                        "s_a": self._s_side_sql(a, mname, fld, "doc_id_a",
+                                                dialect),
+                        "s_b": self._s_side_sql(a, mname, fld, "doc_id_b",
+                                                dialect),
+                        "m": fcol}
+                    if dialect == D.DUCKDB:
+                        structs.append("struct_pack(" + ", ".join(
+                            f'"{k}" := {v}' for k, v in vals.items()) + ")")
+                    else:
+                        structs.append("named_struct(" + ", ".join(
+                            f"'{k}', {v}" for k, v in vals.items()) + ")")
+                conds.append("(" + " OR ".join(fcols) + ")")
+            cond = " AND ".join(conds)
+            if dialect == D.DUCKDB:
+                gen = (f"unnest(CASE WHEN {cond} THEN list_filter("
+                       f"[{', '.join(structs)}], x -> x.m) END, "
+                       "recursive := true)")
+            else:
+                gen = (f"inline(CASE WHEN {cond} THEN filter("
+                       f"array({', '.join(structs)}), x -> x.m) END)")
+            parts.append(
+                "SELECT doc_id_a, doc_id_b, resolver, attr, field, matcher, "
+                f"s_a, s_b FROM (SELECT doc_id_a, doc_id_b, "
+                f"{_q(r.name)} AS resolver, {gen} FROM flags_{r.name})")
         if not parts:
             return ("SELECT '' AS doc_id_a, '' AS doc_id_b, '' AS resolver, "
                     "'' AS attr, '' AS field, '' AS matcher, "
@@ -1077,12 +1101,10 @@ class CompiledPlan:
         )
 
     def sql_match_edges(self, dialect: str) -> str:
-        parts = [f"edges_{r.name}" for r in self.active_resolvers()]
-        if not parts:
-            return ("SELECT '' AS doc_id_a, '' AS doc_id_b, "
-                    "'' AS resolver WHERE 1=0")
-        return " UNION ALL ".join(
-            f"SELECT doc_id_a, doc_id_b, resolver FROM {p}" for p in parts)
+        """verified edges: an edge carries at least one matched binding
+        per resolver attribute, so the distinct (pair, resolver) rows of
+        ``explain_x`` ARE the match-edge set."""
+        return "SELECT DISTINCT doc_id_a, doc_id_b, resolver FROM explain_x"
 
     # ---------- seeded input (rows 13/21/24: ids / snowball / terms) ----------
 
@@ -1192,9 +1214,9 @@ class CompiledPlan:
         out.append(("vals_x", self.sql_vals(dialect)))
         out.append(("vals_wide_x", self.sql_vals_wide(dialect)))
         for r in self.active_resolvers():
-            out.append((f"edges_{r.name}", self.sql_edges_resolver(r, dialect)))
-        out.append(("match_edges_x", self.sql_match_edges(dialect)))
+            out.append((f"flags_{r.name}", self.sql_flags_resolver(r, dialect)))
         out.append(("explain_x", self.sql_explain(dialect)))
+        out.append(("match_edges_x", self.sql_match_edges(dialect)))
         out.append(("pair_scores_x", self.sql_pair_scores(dialect)))
         out.append(("doc_scores_x", self.sql_doc_scores(dialect)))
         return out
