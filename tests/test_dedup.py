@@ -222,3 +222,26 @@ def test_legacy_state_without_accounting_still_compacts(spark, tmp_path):
     assert cur["base_inc"] == 1 and cur["base_rows"] == len(DOCS)
     got = {(r[0], r[1]): r[2] for r in d2.pairs().collect()}
     assert got == _batch_pairs(spark, DOCS)
+
+
+def test_state_refuses_another_identity(spark, tmp_path):
+    """a state committed under one (k, bands, shingle_w, tau) refuses to
+    open under another; a pointer without an identity is accepted and
+    gains it at the next commit; the compaction ratio is policy."""
+    import json
+    state = str(tmp_path / "state")
+    ptr = os.path.join(state, "CURRENT")
+    d = IncrementalDeduper(spark, state)
+    d.fold(_df(spark, DOCS[:3]))
+    with pytest.raises(ValueError, match="identity"):
+        IncrementalDeduper(spark, state, k=d.k + 1)
+    with open(ptr, "w") as f:
+        json.dump({"fold_id": 0}, f)         # pointer without identity
+    d2 = IncrementalDeduper(spark, state, auto_compact_ratio=2.0)
+    d2.fold(_df(spark, DOCS[3:]))
+    with open(ptr) as f:
+        assert json.load(f)["identity"] == d.identity
+    with pytest.raises(ValueError, match="identity"):
+        IncrementalDeduper(spark, state, k=d.k + 1)
+    assert ({(r[0], r[1]): r[2] for r in d2.pairs().collect()}
+            == _batch_pairs(spark, DOCS))

@@ -117,6 +117,18 @@ def test_fold_writes_state_once(spark, model, split, tmp_path, monkeypatch):
     job.unpersist()
 
 
+def test_state_refuses_another_identity(spark, model, folded):
+    """a folded state opened under another block_cap refuses: Δ rows of
+    the new identity would join the committed rows of the old one.  The
+    compaction ratio is a policy, not part of the identity."""
+    r = folded[0]
+    with pytest.raises(ValueError, match="identity"):
+        IncrementalResolver(spark, model, r.state_dir, block_cap=7)
+    IncrementalResolver(spark, model, r.state_dir, auto_compact_ratio=2.0)
+    with open(os.path.join(r.state_dir, "CURRENT")) as f:
+        assert json.load(f)["identity"] == r.identity
+
+
 def test_three_way_fold(spark, model, docs_sf0001, tmp_path):
     parts = [docs_sf0001.where(f"pmod(xxhash64(doc_id), 3) = {i}")
              for i in range(3)]
@@ -251,6 +263,41 @@ def _edgeless_corpus(spark):
         ("a-000008", [("full_name", "Carol Chan"),
                       ("birth_date", "1970-02-02")])])
     return base, [d1, d2]
+
+
+@pytest.mark.parametrize("killed_after", ["docs", "explain_x"])
+def test_orphaned_fold_is_absorbed(spark, model, tmp_path, monkeypatch,
+                                   killed_after):
+    """a fold killed after its docs write, or after its explain_x write,
+    is absorbed by the next add() without a fold_id: its docs are not
+    overwritten and its partial stage rows never join the state."""
+    from zentity_spark.operators import incremental
+
+    def killed(*_a, **_k):
+        raise RuntimeError("killed")
+    base, d1, d2 = _chain_corpus(spark)
+    r = IncrementalResolver(spark, model, str(tmp_path / "st"))
+    r.add(base)
+    if killed_after == "docs":
+        monkeypatch.setattr(r, "_fold", killed)
+    else:
+        monkeypatch.setattr(incremental, "connected_components_by_hash",
+                            killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        r.add(d1)
+    monkeypatch.undo()
+    assert os.path.exists(r._part(killed_after, 1))
+    r.add(d2)
+    all_docs = base.unionByName(d1).unionByName(d2)
+    job = ResolutionJob(spark, all_docs, model)
+    assert _labels(r.clusters()) == _labels(job.clusters())
+    job.unpersist()
+    ids = [x["doc_id"] for x in r.docs().collect()]
+    assert sorted(ids) == sorted(set(ids)) == sorted(
+        x["doc_id"] for x in all_docs.collect())
+    ex = (r.storage.read(r._path("explain_x"))
+          .where(F.col("inc") <= r.committed_fold_id()).drop("inc"))
+    assert ex.count() == ex.distinct().count() > 0
 
 
 @pytest.mark.parametrize("case", ["edgeless_bootstrap", "legacy_pointer"])

@@ -71,14 +71,15 @@ def duo(spark):
 def test_format_swap_resolution_resume_orc(spark, model, duo, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     st = Storage(spark, fmt="orc")
-    job = ResolutionJob(spark, duo, model, checkpoint_dir=ckpt, storage=st)
+    job = ResolutionJob(spark, duo, model, storage=st).cache_stages_under(ckpt)
     out1 = _labels(job.clusters())
     # stage substitutions must scan the configured format
     assert job._replace and all(v.startswith("orc.`")
                                 for v in job._replace.values())
     # resume: a fresh job over the same checkpoint skips completed stages
     # (orc _SUCCESS markers) and reproduces identical labels
-    job2 = ResolutionJob(spark, duo, model, checkpoint_dir=ckpt, storage=st)
+    job2 = ResolutionJob(spark, duo, model,
+                         storage=st).cache_stages_under(ckpt)
     out2 = _labels(job2.clusters())
     assert out1 == out2
     # format-independent result: identical to a plain (parquet) batch run

@@ -1,6 +1,7 @@
-"""Resume/lineage (BASELINE.md resumability row): a checkpointed run
-writes per-stage parquet + metrics; killing after stage k and re-running
-reproduces identical clusters while skipping completed stages.
+"""Resume/lineage (BASELINE.md resumability row): a run under
+``cache_stages_under`` writes per-stage parquet + metrics; killing after
+stage k and re-running reproduces identical clusters while skipping
+completed stages.
 """
 
 import json
@@ -17,35 +18,41 @@ def ckpt(tmp_path):
     return str(tmp_path / "ckpt")
 
 
+def _cached(spark, docs, model, base, **kw):
+    return ResolutionJob(spark, docs, model, **kw).cache_stages_under(base)
+
+
 def _labels(df):
     return sorted((r["doc_id"], r["entity_id"])
                   for r in df.select("doc_id", "entity_id").collect())
 
 
 def test_checkpointed_matches_direct(spark, docs_sf0001, model, ckpt):
-    job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
+    job = _cached(spark, docs_sf0001, model, ckpt)
     got = _labels(job.clusters())
     direct = _labels(ResolutionJob(spark, docs_sf0001, model).clusters())
     assert got == direct
 
 
 def test_resume_skips_completed_stages(spark, docs_sf0001, model, ckpt):
-    job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
+    job = _cached(spark, docs_sf0001, model, ckpt)
     first = _labels(job.clusters())
+    stages = job._ckpt_dir
 
     # "kill after edges": drop the final stage output, keep the rest
-    shutil.rmtree(os.path.join(ckpt, "labels"))
-    attrs_mtime = os.path.getmtime(os.path.join(ckpt, "attrs_x", "_SUCCESS"))
-    edges_mtime = os.path.getmtime(os.path.join(ckpt, "explain_x", "_SUCCESS"))
+    shutil.rmtree(os.path.join(stages, "labels"))
+    attrs_mtime = os.path.getmtime(os.path.join(stages, "attrs_x", "_SUCCESS"))
+    edges_mtime = os.path.getmtime(
+        os.path.join(stages, "explain_x", "_SUCCESS"))
 
-    job2 = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
+    job2 = _cached(spark, docs_sf0001, model, ckpt)
     second = _labels(job2.clusters())
     assert second == first
     # completed stages untouched (skipped, not recomputed)
     assert os.path.getmtime(
-        os.path.join(ckpt, "attrs_x", "_SUCCESS")) == attrs_mtime
+        os.path.join(stages, "attrs_x", "_SUCCESS")) == attrs_mtime
     assert os.path.getmtime(
-        os.path.join(ckpt, "explain_x", "_SUCCESS")) == edges_mtime
+        os.path.join(stages, "explain_x", "_SUCCESS")) == edges_mtime
 
 
 def test_warm_stage_dir_serves_labels(spark, docs_sf0001, model, tmp_path,
@@ -68,9 +75,9 @@ def test_warm_stage_dir_serves_labels(spark, docs_sf0001, model, tmp_path,
 
 
 def test_metrics_lineage_written(spark, docs_sf0001, model, ckpt):
-    job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
+    job = _cached(spark, docs_sf0001, model, ckpt)
     job.clusters()
-    with open(os.path.join(ckpt, "metrics.jsonl")) as f:
+    with open(os.path.join(job._ckpt_dir, "metrics.jsonl")) as f:
         rows = [json.loads(line) for line in f]
     stages = [r["stage"] for r in rows]
     # keys_x / vals_wide_x materialize concurrently → order varies;
@@ -83,19 +90,52 @@ def test_metrics_lineage_written(spark, docs_sf0001, model, ckpt):
 
 
 def test_stale_checkpoint_refused(spark, docs_sf0001, model, ckpt):
-    """reusing a checkpoint dir after the job identity changes (model /
-    scope / block_cap / input files) must refuse, not silently join stale
-    stage parquet against the new inputs (ADVICE round 1)."""
-    job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
+    """a job whose identity changed (model / scope / block_cap / input
+    files) must never read the stages of another identity, not silently
+    join stale stage parquet against the new inputs (ADVICE round 1):
+    over the same base it opens a different dir, its labels equal a
+    direct run's, and the first dir is left untouched."""
+    job = _cached(spark, docs_sf0001, model, ckpt)
     job.clusters()
-    job2 = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt,
-                         block_cap=7)
-    with pytest.raises(ValueError, match="fingerprint"):
-        job2.clusters()
+    first = job._ckpt_dir
+    marks = {st: os.path.getmtime(os.path.join(first, st, "_SUCCESS"))
+             for st in os.listdir(first)
+             if os.path.isdir(os.path.join(first, st))}
+    job2 = _cached(spark, docs_sf0001, model, ckpt, block_cap=7)
+    got = _labels(job2.clusters())
+    assert job2._ckpt_dir != first
+    direct = ResolutionJob(spark, docs_sf0001, model, block_cap=7)
+    assert got == _labels(direct.clusters())
+    direct.unpersist()
+    assert {st: os.path.getmtime(os.path.join(first, st, "_SUCCESS"))
+            for st in marks} == marks
+
+
+def test_one_writer_per_stage(spark, docs_sf0001, model, ckpt):
+    """every stage of the dir, ``labels`` included, is written once by
+    materialize(): two jobs over one base leave one lineage row per
+    stage, the second job's clusters() writes nothing, and the dir holds
+    no sidecar beyond the stages, ``key_blocks.json`` and the lineage."""
+    job = _cached(spark, docs_sf0001, model, ckpt)
+    first = _labels(job.clusters())
+    lineage = os.path.join(job._ckpt_dir, "metrics.jsonl")
+    with open(lineage) as f:
+        rows = f.read().splitlines()
+    stages = [json.loads(r)["stage"] for r in rows]
+    assert len(stages) == len(set(stages)) and "labels" in stages
+    job2 = _cached(spark, docs_sf0001, model, ckpt)
+    assert _labels(job2.clusters()) == first
+    with open(lineage) as f:
+        assert f.read().splitlines() == rows
+    assert os.listdir(ckpt) == [os.path.basename(job._ckpt_dir)]
+    assert not os.path.exists(os.path.join(job._ckpt_dir, "fingerprint.txt"))
+    assert sorted(f for f in os.listdir(job._ckpt_dir)
+                  if not os.path.isdir(os.path.join(job._ckpt_dir, f))) \
+        == ["key_blocks.json", "metrics.jsonl"]
 
 
 def test_unpersist_removes_owned_scratch_dir(spark, docs_sf0001, model):
-    """jobs without a checkpoint_dir own their scratch dir and must remove
+    """jobs without a stage cache own their scratch dir and must remove
     it on unpersist (bench loops were leaking stage parquet into /tmp)."""
     job = ResolutionJob(spark, docs_sf0001, model)
     job.materialize()
@@ -106,10 +146,11 @@ def test_unpersist_removes_owned_scratch_dir(spark, docs_sf0001, model):
 
 
 def test_unpersist_keeps_user_checkpoint_dir(spark, docs_sf0001, model, ckpt):
-    job = ResolutionJob(spark, docs_sf0001, model, checkpoint_dir=ckpt)
+    job = _cached(spark, docs_sf0001, model, ckpt)
     job.clusters()
+    stages = job._ckpt_dir
     job.unpersist()
-    assert os.path.exists(os.path.join(ckpt, "labels"))
+    assert os.path.exists(os.path.join(stages, "labels"))
 
 
 def test_fingerprint_covers_wide_cc_ids(spark):

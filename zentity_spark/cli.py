@@ -39,8 +39,9 @@ def _common(ap: argparse.ArgumentParser) -> None:
     ap.add_argument("--include-resolver", action="append", default=[])
     ap.add_argument("--exclude-resolver", action="append", default=[])
     ap.add_argument("--checkpoint-dir", default=None,
-                    help="stage dir; a re-run over it resumes from the "
-                         "last completed stage")
+                    help="stage cache; stages go under <dir>/<fingerprint> "
+                         "and a re-run over it resumes from the last "
+                         "completed stage")
 
 
 def _job(args) -> ResolutionJob:
@@ -52,10 +53,11 @@ def _job(args) -> ResolutionJob:
         model = Model.parse(f.read())
     scope = Scope(include_resolvers=tuple(args.include_resolver),
                   exclude_resolvers=tuple(args.exclude_resolver))
-    return ResolutionJob(spark, docs, model, scope=scope,
-                         block_cap=args.block_cap,
-                         checkpoint_dir=args.checkpoint_dir,
-                         storage=storage)
+    job = ResolutionJob(spark, docs, model, scope=scope,
+                        block_cap=args.block_cap, storage=storage)
+    if args.checkpoint_dir:
+        job.cache_stages_under(args.checkpoint_dir)
+    return job
 
 
 def main(argv=None) -> int:

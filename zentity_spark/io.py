@@ -28,6 +28,7 @@ pointer and ratio-gated compaction.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import shutil
@@ -121,9 +122,15 @@ class FoldState:
       same batch_id and rows) replaces its own partial output instead of
       appending duplicates.
     * ``CURRENT`` is the commit point: ``{"fold_id", "base_inc",
-      "base_rows", "delta_rows"}``, written aside and renamed into place.
-      Readers see only the committed range ``base_inc <= inc <= fold_id``,
-      so incs of a fold that crashed before its rename are invisible.
+      "base_rows", "delta_rows", "identity"}``, written aside and renamed
+      into place.  Readers see only the committed range
+      ``base_inc <= inc <= fold_id``, so incs of a fold that crashed
+      before its rename are invisible.
+    * ``identity`` digests what the rows were computed under (the
+      subclass's model and parameters, not its compaction policy):
+      opening a state committed under another identity raises, so Δ rows
+      of a new model never join rows of the old one.  A pointer without
+      one is accepted and gains it at the next commit.
     * Ratio-gated compaction bounds read amplification, LSM-style: a
       compacting fold writes the full current view of each ``COMPACTED``
       stage into its own inc and becomes the new base; the older incs
@@ -140,7 +147,7 @@ class FoldState:
     # gate counts the rows of the first
     COMPACTED: tuple[str, ...] = ()
 
-    def __init__(self, spark: SparkSession, state_dir: str,
+    def __init__(self, spark: SparkSession, state_dir: str, identity: str,
                  storage: Storage | None = None,
                  auto_compact_ratio: float | None = 4.0):
         self.spark = spark
@@ -151,6 +158,13 @@ class FoldState:
         self.state_dir = state_dir
         os.makedirs(state_dir, exist_ok=True)
         self._ptr = os.path.join(state_dir, "CURRENT")
+        self.identity = hashlib.md5(identity.encode()).hexdigest()
+        prev = (self._current() or {}).get("identity")
+        if prev not in (None, self.identity):
+            raise ValueError(
+                f"fold state {state_dir} was committed under another "
+                f"identity ({prev[:12]}…, this fold {self.identity[:12]}…)"
+                f" — refusing to mix its rows with this one's")
 
     def _path(self, stage: str) -> str:
         return os.path.join(self.state_dir, stage)
@@ -159,6 +173,14 @@ class FoldState:
         """per-increment overwrite target (partition-dir layout, so reading
         the stage root sees the union of all incs plus an ``inc`` column)."""
         return os.path.join(self._path(stage), f"inc={fold_id}")
+
+    def _incs(self, stage: str) -> list[int]:
+        """the fold ids with an ``inc=`` dir under ``stage`` (file
+        formats; a catalog table lists none)."""
+        root = self._path(stage)
+        if not (self.storage.file_based and os.path.isdir(root)):
+            return []
+        return [int(d[4:]) for d in os.listdir(root) if d.startswith("inc=")]
 
     def _current(self) -> dict | None:
         if not os.path.exists(self._ptr):
@@ -206,15 +228,15 @@ class FoldState:
             ptr = {"fold_id": fold_id, "base_inc": cur.get("base_inc") or 0,
                    "base_rows": cur.get("base_rows") or 0,
                    "delta_rows": (cur.get("delta_rows") or 0) + delta_rows}
+        ptr["identity"] = self.identity
         tmp = self._ptr + ".tmp"
         with open(tmp, "w") as f:
             json.dump(ptr, f)
         os.replace(tmp, self._ptr)
         # catalog formats: superseded rows are harmless (reads filter by
         # base_inc); snapshot expiry is the catalog's job
-        if compact and self.storage.file_based:
+        if compact:
             for stage in self.COMPACTED:
-                root = self._path(stage)
-                for d in os.listdir(root):
-                    if d.startswith("inc=") and int(d[4:]) != fold_id:
-                        self.storage.remove(os.path.join(root, d))
+                for i in self._incs(stage):
+                    if i != fold_id:
+                        self.storage.remove(self._part(stage, i))

@@ -73,7 +73,10 @@ class IncrementalDeduper(FoldState):
                  tau: float = tdops.JACCARD_TAU,
                  storage: Storage | None = None,
                  auto_compact_ratio: float = 4.0):
-        super().__init__(spark, state_dir, storage, auto_compact_ratio)
+        super().__init__(
+            spark, state_dir,
+            f"k={k}|bands={bands}|shingle_w={shingle_w}|tau={tau}",
+            storage, auto_compact_ratio)
         self.k, self.bands, self.shingle_w, self.tau = k, bands, shingle_w, tau
         # observability for tests: executed plan of the last Δ probe join,
         # and whether the last fold compacted

@@ -66,12 +66,21 @@ components), never O(N) — the labels/seen-ids full rewrite that used to
 dominate fold cost at large N (BENCH/incremental_bench.json r4) is gone.
 Docs not yet visible in any committed label inc (``inc > CURRENT.fold_id``)
 ARE the next fold's Δ, which both removes the separate seen-id table and
-self-heals increments orphaned by a crash.  A fold that already
-committed is refused here and skipped by the stream caller via
-``committed_fold_id()`` (streaming/resolve.py).
+self-heals increments orphaned by a crash: ``add()`` without a
+``fold_id`` takes one above both the commit and every ``docs/inc=`` on
+disk, so it never overwrites an orphan's docs, and the fold first drops
+every other inc above the commit (the orphan's partial stage,
+``explain_x`` and ``labels`` rows; file formats) before it reads the
+state.  A fold that already committed is refused here and skipped by
+the stream caller via ``committed_fold_id()`` (streaming/resolve.py).
+The ``CURRENT`` pointer records the fold identity (model, scope,
+``block_cap``, ``wide_cc_ids``): reopening a state under another one
+raises.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -106,9 +115,14 @@ class IncrementalResolver(FoldState):
                  storage: Storage | None = None,
                  auto_compact_ratio: float = 4.0,
                  wide_cc_ids: bool = False):
-        super().__init__(spark, state_dir, storage, auto_compact_ratio)
+        scope = scope if scope is not None else DEFAULT_SCOPE
+        super().__init__(
+            spark, state_dir,
+            "|".join([model.to_json(), repr(scope), str(block_cap),
+                      f"wide_cc={wide_cc_ids}"]),
+            storage, auto_compact_ratio)
         self.model = model
-        self.scope = scope if scope is not None else DEFAULT_SCOPE
+        self.scope = scope
         self.block_cap = block_cap
         # 128-bit CC node ids — the incremental fold IS the 10¹²-doc
         # operating mode, so the collision-margin flag must be reachable
@@ -233,8 +247,10 @@ class IncrementalResolver(FoldState):
         if fold_id is None:
             # strictly above every committed fold — stream batch_ids can
             # skip ordinals (empty batches), so a fold count could collide
-            # with (and overwrite) an existing inc= dir
-            fold_id = committed + 1
+            # with (and overwrite) an existing inc= dir — and above every
+            # landed docs inc: a fold that died after its docs write left
+            # them above the commit, for this fold to absorb
+            fold_id = 1 + max([committed, *self._incs("docs")])
         elif fold_id <= committed:
             raise ValueError(
                 f"fold_id {fold_id} already committed (last = {committed}) "
@@ -262,6 +278,16 @@ class IncrementalResolver(FoldState):
         bootstrap included (``cur is None``; see the module doc)."""
         spark = self.spark
         cur = self._current()
+        committed = self.committed_fold_id()
+        # a fold that died before its commit left incs above it beside its
+        # docs; this fold absorbs those docs, so drop the rest (partial
+        # stage, explain_x and labels rows) before they join this fold's
+        # reads.  File formats only, as for the compaction prune.
+        for st in os.listdir(self.state_dir):
+            if st != "docs":
+                for i in self._incs(st):
+                    if i > committed:
+                        self.storage.remove(self._part(st, i))
         # Δ = every doc landed SINCE the last committed fold: the docs
         # table is inc-partitioned, so ``inc > committed`` is exactly the
         # set no committed label state has seen — the current increment
@@ -270,7 +296,7 @@ class IncrementalResolver(FoldState):
         # fold).  doc_ids are globally unique across increments (streaming
         # ingest dedups on doc_id before the sink).
         new_docs = (self.storage.read(self._path("docs"))
-                    .where(F.col("inc") > self.committed_fold_id())
+                    .where(F.col("inc") > committed)
                     .select("doc_id", "spans"))
         job = ResolutionJob(spark, new_docs, self.model, self.scope,
                             self.block_cap)

@@ -6,10 +6,14 @@ match edges (all compiled SQL from plans/compiler.py, pure JVM codegen) →
 connected components (operators/cluster.py) → cluster output with span
 passthrough.
 
-One batch path: ``ResolutionJob.clusters()``.  Every stage it writes lands
-in the job's stage dir (per-stage ``_SUCCESS`` markers + a
-``metrics.jsonl`` lineage row each), so the same call with a
-``checkpoint_dir`` is the resumable run (SURVEY §5.3).
+One batch path: ``ResolutionJob.clusters()``.  ``materialize()`` is the
+only writer of a stage: every stage, ``explain_x`` and ``labels``
+included, lands in the job's stage dir with a ``_SUCCESS`` marker and a
+``metrics.jsonl`` lineage row.  One stage-dir convention:
+``cache_stages_under(base)`` names the dir ``base/<fingerprint>``, so a
+job opens only stages written under its own (model, scope, block_cap,
+input files) and the same call over a warm ``base`` is the resumable run
+(SURVEY §5.3).  Without it a job writes into a scratch dir it owns.
 """
 
 from __future__ import annotations
@@ -41,7 +45,6 @@ class ResolutionJob:
 
     def __init__(self, spark: SparkSession, docs: DataFrame, model: Model,
                  scope: Scope | None = None, block_cap: int = 1000,
-                 checkpoint_dir: str | None = None,
                  storage: "Storage | None" = None,
                  wide_cc_ids: bool = False):
         self.spark = spark
@@ -50,8 +53,8 @@ class ResolutionJob:
         # by test; ~2× CC shuffle width) — see connected_components_by_hash
         self.wide_cc_ids = wide_cc_ids
         self.storage = storage if storage is not None else Storage(spark)
-        self._ckpt_dir = checkpoint_dir
-        self._owns_ckpt_dir = checkpoint_dir is None
+        self._ckpt_dir: str | None = None
+        self._owns_ckpt_dir = False
         self.plan: CompiledPlan = compile_model(
             model, scope or DEFAULT_SCOPE, block_cap)
         if any(m.kind == "jaro_winkler" for m in model.matchers.values()):
@@ -95,8 +98,9 @@ class ResolutionJob:
     EDGE_STAGE = "explain_x"
 
     # the connected-component labels (doc_id, entity_id) of edge-bearing
-    # docs — the fold state's ``labels`` schema.  Written by the first
-    # clusters() call on top of EDGE_STAGE.
+    # docs — the fold state's ``labels`` schema.  Not a CTE: materialize()
+    # builds it by connected components over match_edges_x, on top of
+    # EDGE_STAGE, when clusters() first asks for it.
     LABEL_STAGE = "labels"
 
     def _ck_level(self):
@@ -119,10 +123,9 @@ class ResolutionJob:
         stats.
 
         The statistic is a pure function of keys_x, so a job with a stage
-        dir persists it beside ``fingerprint.txt`` (``key_blocks.json``)
-        and later jobs opening the dir read it back instead of re-running
-        the aggregate; the policy is re-derived against each plan's own
-        hot threshold."""
+        dir persists it there (``key_blocks.json``) and later jobs opening
+        the dir read it back instead of re-running the aggregate; the
+        policy is re-derived against each plan's own hot threshold."""
         import json
         if self.plan.skew_policy is not None:
             return
@@ -153,7 +156,11 @@ class ResolutionJob:
     def materialize(self, stages=None) -> None:
         """write the fan-out stages to parquet once and substitute file
         scans for their CTEs (idempotent); independent stages within one
-        dependency level run as concurrent Spark jobs from threads.
+        dependency level run as concurrent Spark jobs from threads.  The
+        only stage writer: ``stages`` may name ``LABEL_STAGE``, which is
+        connected components over ``match_edges_x`` rather than a CTE.
+        A stage already complete in the dir (``_SUCCESS``) is only
+        substituted, never rewritten.
 
         Two reasons files, not cached temp views: (1) Spark recomputes CTE
         subtrees per reference, so attrs/keys would re-run once per
@@ -188,14 +195,13 @@ class ResolutionJob:
             self._ckpt_dir = tempfile.mkdtemp(prefix="zentity_stage_", dir=base)
             self._owns_ckpt_dir = True
         os.makedirs(self._ckpt_dir, exist_ok=True)
-        self._check_fingerprint()
 
         for level in stages:
             todo = [st for st in level if st not in self._replace]
             # pre-render every stage's SQL BEFORE starting threads: worker
             # threads must not call stage() (which reads self._replace)
             # while the level's fast-path updates land
-            jobs = [(st, self.stage(f"SELECT * FROM {st}", upto=st))
+            jobs = [(st, self._stage_frame(st))
                     for st in todo if not self.storage.complete(
                         os.path.join(self._ckpt_dir, st))]
             if len(jobs) == 1:
@@ -208,8 +214,21 @@ class ResolutionJob:
                 for t in threads:
                     t.join()
             for st in todo:
-                path = os.path.join(self._ckpt_dir, st)
-                self._replace[st] = self.storage.scan_sql(path)
+                # LABEL_STAGE is no CTE: substituting the word ``labels``
+                # would rewrite it inside every compiled query
+                if st != self.LABEL_STAGE:
+                    self._replace[st] = self.storage.scan_sql(
+                        os.path.join(self._ckpt_dir, st))
+
+    def _stage_frame(self, st: str) -> DataFrame:
+        """the rows stage ``st`` writes: its compiled CTE, or for
+        ``LABEL_STAGE`` the components of the verified edges."""
+        if st == self.LABEL_STAGE:
+            return connected_components_by_hash(
+                self.stage("SELECT doc_id_a, doc_id_b FROM match_edges_x",
+                           upto="match_edges_x"),
+                wide_ids=self.wide_cc_ids)
+        return self.stage(f"SELECT * FROM {st}", upto=st)
 
     def _edge_stage(self) -> None:
         """materialize ``EDGE_STAGE`` on top of the default levels — the
@@ -219,18 +238,19 @@ class ResolutionJob:
         self.materialize(((self.EDGE_STAGE,),))
 
     def cache_stages_under(self, base: str) -> "ResolutionJob":
-        """share materialized stages across jobs: the checkpoint dir becomes
+        """persist and share stages: the stage dir becomes
         ``base/<fingerprint>``, so any job with the same (model, scope,
-        block_cap, input files) reuses already-written stage parquet
-        (idempotent via per-stage _SUCCESS markers) instead of re-deriving
-        it into a fresh mkdtemp.  Besides the default levels and the
-        persisted skew statistic, the dir holds the edge-and-explanation
-        stage (``EDGE_STAGE``), written by the first job that reads
-        edges, scores or explanations — later jobs run no pair or verify
-        plan — and the component labels (``LABEL_STAGE``), written by the
-        first clusters() call — later jobs run no connected components.
-        The dir is NOT owned (never auto-deleted by unpersist) —
-        callers manage ``base``'s lifetime."""
+        block_cap, input files) reuses already-written stages (per-stage
+        ``_SUCCESS`` markers) — a re-run resumes from the last completed
+        stage — and a job with another identity opens another dir, so
+        stale stages never join new docs.  Besides the default levels and
+        the persisted skew statistic, the dir holds the
+        edge-and-explanation stage (``EDGE_STAGE``), written by the first
+        job that reads edges, scores or explanations — later jobs run no
+        pair or verify plan — and the component labels (``LABEL_STAGE``),
+        written by the first clusters() call — later jobs run no
+        connected components.  The dir is NOT owned (never removed by
+        unpersist) — callers manage ``base``'s lifetime."""
         os.makedirs(base, exist_ok=True)
         self._ckpt_dir = os.path.join(base, self.fingerprint())
         self._owns_ckpt_dir = False
@@ -238,7 +258,7 @@ class ResolutionJob:
 
     def unpersist(self) -> None:
         """drop stage substitutions and the docs view, and remove the
-        job-owned scratch dir (user-supplied checkpoint dirs are never
+        job-owned scratch dir (a ``cache_stages_under`` dir is never
         deleted)."""
         self._replace.clear()
         self.spark.catalog.dropTempView(self._view)
@@ -248,34 +268,18 @@ class ResolutionJob:
             self._ckpt_dir = None
 
     def fingerprint(self) -> str:
-        """identity of (model, scope, block_cap, input files): a checkpoint
-        dir written under one fingerprint must not be resumed under another
-        — stale stage parquet would silently join against new docs."""
+        """identity of (model, scope, block_cap, input files): it names the
+        ``cache_stages_under`` dir, so stages written under one identity
+        are never read under another."""
         import hashlib
         files = ";".join(sorted(self.docs.inputFiles()))
         body = "|".join([
             self.plan.model.to_json(), repr(self.plan.scope),
             str(self.plan.block_cap), files,
             # id-width mode changes cluster labels' collision identity:
-            # a narrow-mode checkpoint must not serve a wide-mode resume
+            # narrow-mode labels must not serve a wide-mode job
             f"wide_cc={self.wide_cc_ids}"])
         return hashlib.md5(body.encode()).hexdigest()
-
-    def _check_fingerprint(self) -> None:
-        fp_path = os.path.join(self._ckpt_dir, "fingerprint.txt")
-        fp = self.fingerprint()
-        if os.path.exists(fp_path):
-            with open(fp_path) as f:
-                prev = f.read().strip()
-            if prev != fp:
-                raise ValueError(
-                    f"checkpoint dir {self._ckpt_dir} was written for a "
-                    f"different (model, scope, block_cap, docs) — refusing "
-                    f"to resume (stale fingerprint {prev[:12]}…, current "
-                    f"{fp[:12]}…). Use a fresh --checkpoint-dir.")
-        else:
-            with open(fp_path, "w") as f:
-                f.write(fp)
 
     # ---------- stage writes (SURVEY §5.3 resume/lineage, M7) ----------
 
@@ -295,16 +299,6 @@ class ResolutionJob:
                 "stage": name, "rows_out": obs.get["n"],
                 "wall_ms": round((_t.time() - t0) * 1000, 1),
                 "ts": _t.time()}) + "\n")
-
-    def _ckpt_stage(self, name: str, build) -> DataFrame:
-        """idempotent stage materialization: skip when the stage is
-        complete (_SUCCESS), else compute, write, and record lineage.
-        The restart contract: overwrite-by-stage, so a killed run resumes
-        from the last completed stage with identical results."""
-        path = os.path.join(self._ckpt_dir, name)
-        if not self.storage.complete(path):
-            self._write_stage(name, build())
-        return self.storage.read(path)
 
     def attrs(self) -> DataFrame:
         return self.stage(
@@ -373,17 +367,14 @@ class ResolutionJob:
         component become singletons (entity_id = own doc_id); spans pass
         through untouched (per-row span-sequence invariant).
 
-        The component labels of edge-bearing docs are ``LABEL_STAGE`` of
-        the stage dir, written by the first call on top of the edge stage
-        — so with a ``checkpoint_dir`` this IS the resumable batch run, and
-        a job opening a warm dir runs no connected components."""
-        # the edge stage first: it opens and fingerprint-checks the dir
-        edges = self.match_edges()
-        labels = self._ckpt_stage(
-            self.LABEL_STAGE,
-            lambda: connected_components_by_hash(
-                edges.select("doc_id_a", "doc_id_b"),
-                wide_ids=self.wide_cc_ids))
+        The component labels of edge-bearing docs are ``LABEL_STAGE``,
+        materialized on top of the edge stage — so under
+        ``cache_stages_under`` this IS the resumable batch run, and a job
+        opening a warm dir runs no connected components."""
+        self.match_edges()  # the edge stage the labels are built from
+        self.materialize(((self.LABEL_STAGE,),))
+        labels = self.storage.read(
+            os.path.join(self._ckpt_dir, self.LABEL_STAGE))
         return (
             self.docs.join(labels, "doc_id", "left")
             .select(
