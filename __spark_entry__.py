@@ -125,15 +125,21 @@ def _q_clusters(spark, sf_dir):
 
 
 def _q_clusters_wide128(spark, sf_dir):
-    """the 128-bit CC node-id mode (struct of two independent xxhash64
-    columns through the star rounds — collision margin for 10¹² docs)
-    against the SAME recursive-CTE clustering oracle as er_clusters: a
-    green entry pins wide-mode labels == narrow-mode labels == oracle at
-    the driver gate, not just in pytest."""
+    """the Spark star loop of connected_components_by_hash against the
+    SAME recursive-CTE clustering oracle as er_clusters.  The sf0.01
+    match graph fits the driver budget, so er_clusters is labelled by the
+    driver union-find; this entry runs clusters() in a session with
+    auto-broadcast disabled (budget 0), on a job with its own scratch
+    stage dir so a warm ``labels`` stage cannot answer.  A green entry
+    pins the star loop's labels == oracle at the driver gate, not just in
+    pytest.  (The entry name is part of the driver contract.)"""
+    import tempfile
+    s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     corpus = corpus_dir_for_sf_dir(sf_dir)
-    docs = spark.read.parquet(os.path.join(corpus, "docs_spans.parquet"))
-    job = ResolutionJob(spark, docs, _model(), wide_cc_ids=True) \
-        .cache_stages_under(_stage_cache_base())
+    docs = s.read.parquet(os.path.join(corpus, "docs_spans.parquet"))
+    job = ResolutionJob(s, docs, _model()).cache_stages_under(
+        tempfile.mkdtemp(prefix="wide128_", dir=_stage_cache_base()))
     return job.clusters().select("doc_id", "entity_id")
 
 
@@ -672,16 +678,16 @@ def _q_td_dedup_groups(spark, sf_dir):
     near-dup pairs (which subsume exact dups at j = 1 for docs long
     enough to shingle; docs with < MINHASH_SHINGLE_W_LOWBG tokens emit
     no shingles and keep both copies — union td_exact_dupes pairs first
-    when short-doc dedup matters) → the ER engine's
-    large/small-star connected components → per-doc canonical id, i.e.
-    the keep-one map a training-data pipeline applies.  Scale shape:
+    when short-doc dedup matters) → the ER engine's connected
+    components (``connected_components_by_hash``) → per-doc canonical
+    id, i.e. the keep-one map a training-data pipeline applies.  Scale shape:
     pairs are measured O(N) on the lowbg tier (BENCH/MINHASH_SCALE.md)
     and the CC is the same scale-safe operator the resolver uses."""
-    from zentity_spark.operators.cluster import connected_components
+    from zentity_spark.operators.cluster import connected_components_by_hash
     path = os.path.join(sf_dir, "documents.parquet")
     pairs = (spark.sql(tdops.sql_minhash_lowbg_pairs(
         f"parquet.`{path}`", D.SPARK)).select("doc_id_a", "doc_id_b"))
-    labels = connected_components(pairs)
+    labels = connected_components_by_hash(pairs)
     docs = spark.read.parquet(path).select("doc_id")
     return docs.join(labels, "doc_id", "left").select(
         "doc_id", F.coalesce("entity_id", "doc_id").alias("canonical_id"))
@@ -700,15 +706,15 @@ def _embed_ivf_sql(dialect: str, rel: str, n: int) -> str:
 
 def _q_td_embed_dedup_groups(spark, sf_dir):
     """embedding-cosine near-dup dedup map: IVF candidates verified at
-    cosine ≥ 0.95 → star CC → per-vector canonical id (keep-one map) —
-    the embedding-side sibling of td_dedup_groups."""
-    from zentity_spark.operators.cluster import connected_components
+    cosine ≥ 0.95 → connected components → per-vector canonical id
+    (keep-one map) — the embedding-side sibling of td_dedup_groups."""
+    from zentity_spark.operators.cluster import connected_components_by_hash
     path = os.path.join(sf_dir, "embeddings.parquet")
     n = spark.read.parquet(path).count()
     pairs = (spark.sql(_embed_ivf_sql(D.SPARK, f"parquet.`{path}`", n))
              .select(F.col("vec_id_a").alias("doc_id_a"),
                      F.col("vec_id_b").alias("doc_id_b")))
-    labels = connected_components(pairs)
+    labels = connected_components_by_hash(pairs)
     vecs = spark.read.parquet(path).select(F.col("vec_id").alias("doc_id"))
     return vecs.join(labels, "doc_id", "left").select(
         F.col("doc_id").alias("vec_id"),
@@ -857,7 +863,7 @@ def oracle_sql() -> dict[str, str]:
             "SELECT doc_id_a, doc_id_b, resolver FROM match_edges_x"),
         "er_clusters": _oracle_clusters(
             "SELECT doc_id, entity_id FROM labels"),
-        # wide-id mode must reproduce the identical labeling
+        # the Spark star loop must reproduce the identical labeling
         "er_clusters_wide128": _oracle_clusters(
             "SELECT doc_id, entity_id FROM labels"),
         "er_cluster_sizes": _oracle_clusters(

@@ -66,16 +66,16 @@ def docs_sf0001(spark, sf0001_dir):
 
 @pytest.fixture()
 def spark_cc_calls(monkeypatch):
-    """one entry per call of the hashed Spark star loop
-    (``cluster.connected_components``) made during the test."""
+    """one entry per call of the Spark star loop
+    (``cluster._star_components``) made during the test."""
     from zentity_spark.operators import cluster
     calls = []
-    real = cluster.connected_components
+    real = cluster._star_components
 
     def spy(*a, **k):
         calls.append(1)
         return real(*a, **k)
-    monkeypatch.setattr(cluster, "connected_components", spy)
+    monkeypatch.setattr(cluster, "_star_components", spy)
     return calls
 
 

@@ -7,8 +7,8 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 
 from zentity_spark.operators.cluster import (
+    _star_components,
     bounded_label_propagation,
-    connected_components,
 )
 
 
@@ -35,7 +35,7 @@ def _spark_components(spark, edges):
     df = spark.createDataFrame(
         [(f"n{a:03d}", f"n{b:03d}") for a, b in edges],
         "doc_id_a string, doc_id_b string")
-    labels = connected_components(df)
+    labels = _star_components(df)
     comps = {}
     for r in labels.collect():
         comps.setdefault(r["entity_id"], set()).add(r["doc_id"])
@@ -59,7 +59,7 @@ def test_cc_matches_union_find(spark, edges):
 
 def test_cc_empty(spark):
     df = spark.createDataFrame([], "doc_id_a string, doc_id_b string")
-    assert connected_components(df).count() == 0
+    assert _star_components(df).count() == 0
 
 
 def test_cc_label_is_component_min(spark):
@@ -67,7 +67,7 @@ def test_cc_label_is_component_min(spark):
         [("c", "b"), ("b", "a"), ("z", "y")],
         "doc_id_a string, doc_id_b string")
     rows = {r["doc_id"]: r["entity_id"]
-            for r in connected_components(df).collect()}
+            for r in _star_components(df).collect()}
     assert rows == {"a": "a", "b": "a", "c": "a", "y": "y", "z": "y"}
 
 
@@ -104,57 +104,18 @@ def test_bounded_label_propagation_zero_hops(spark):
     assert got == {"d1": 0}
 
 
-def test_cc_wide_ids_identical_labels(spark):
-    """128-bit node-id mode (VERDICT r4 missing #4): the struct-of-two-
-    hashes ids flow through the same star rounds and restore EXACTLY the
-    labels of the 64-bit mode on the fixture corpus's match edges."""
-    from zentity_spark.model import Model
-    from zentity_spark.operators.cluster import connected_components_by_hash
-    from zentity_spark.pipeline import ResolutionJob
-
-    docs = spark.read.parquet("fixtures/sf0.001/docs_spans.parquet")
-    model = Model.parse(open("fixtures/model_person.json").read())
-    edges = (ResolutionJob(spark, docs, model).match_edges()
-             .select("doc_id_a", "doc_id_b").localCheckpoint())
-    narrow = {(r["doc_id"], r["entity_id"]) for r in
-              connected_components_by_hash(edges).collect()}
-    wide = {(r["doc_id"], r["entity_id"]) for r in
-            connected_components_by_hash(edges, wide_ids=True).collect()}
-    assert narrow == wide and len(narrow) > 0
-    # and through the job-level flag: full clusters() output identical
-    base = ResolutionJob(spark, docs, model).clusters() \
-        .select("doc_id", "entity_id").collect()
-    w = ResolutionJob(spark, docs, model, wide_cc_ids=True).clusters() \
-        .select("doc_id", "entity_id").collect()
-    assert {tuple(r) for r in base} == {tuple(r) for r in w}
-
-
-def test_cc_wide_ids_salt_first_independence(spark):
-    """regression guard for the 128-bit mode's independence property:
-    Spark's multi-arg xxhash64 chains the running hash as the next seed,
-    so xxhash64(c, 1) is a PURE FUNCTION of xxhash64(c) (an h1 collision
-    would force an h2 collision — zero added resistance).  The shipped
-    form must salt FIRST (xxhash64(1, c)); pin that h2 differs from the
-    chained form, and that h2 is not reconstructable from h1 alone by
-    the chain rule."""
-    rows = spark.sql(
-        "SELECT xxhash64('a') h1, xxhash64(1, 'a') salted, "
-        "xxhash64('a', 1) chained").collect()[0]
-    assert rows["salted"] != rows["chained"]
-    from zentity_spark.operators.cluster import connected_components_by_hash
-    import inspect
-    src = inspect.getsource(connected_components_by_hash)
-    assert "xxhash64(1, {c})" in src and "xxhash64({c}, 1)" not in src
-
-
 # ---------------------------------------------------------------------------
-# connected_components_by_hash: driver union-find vs the hashed Spark loop
+# connected_components_by_hash: driver union-find vs the Spark star loop
 # ---------------------------------------------------------------------------
 
 # node names whose code-point (= UTF-8 byte) order differs from a
 # case-folded or UTF-16 order: "Z" < "a" < "ab" < "é" < "￿" < astral
 _IDS = ["Z", "a", "ab", "é", "￿", "\U0001F600", "\U0001F600a",
         "n-0", "n-00", "n-1", "0", "éa"]
+# int64 ids (the dedup and td_* graphs), negatives and both extremes
+# included: their value order differs from their decimal-string order
+_LONG_IDS = [-(1 << 63), -10, -9, -1, 0, 1, 9, 10, 100, 1 << 32,
+             (1 << 63) - 2, (1 << 63) - 1]
 
 _ids_edges = st.lists(
     st.tuples(st.one_of(st.integers(0, len(_IDS) - 1), st.none()),
@@ -162,21 +123,22 @@ _ids_edges = st.lists(
     min_size=0, max_size=20)
 
 
-def _labels_by_hash(session, pairs, wide_ids=False):
+def _labels_by_hash(session, pairs, id_type="string"):
     from zentity_spark.operators.cluster import connected_components_by_hash
-    df = session.createDataFrame(pairs, "doc_id_a string, doc_id_b string")
+    df = session.createDataFrame(
+        pairs, f"doc_id_a {id_type}, doc_id_b {id_type}")
     return {r["doc_id"]: r["entity_id"] for r in
-            connected_components_by_hash(df, wide_ids=wide_ids).collect()}
+            connected_components_by_hash(df).collect()}
 
 
-def _uf_labels(idx_edges):
+def _uf_labels(idx_edges, ids=_IDS):
     """expected labels: each member of a multi-node component → its
-    minimum id string (null ends dropped, as _canon does)."""
+    minimum id (null ends dropped, as _canon does)."""
     kept = [(a, b) for a, b in idx_edges if a is not None]
-    comps = _uf_components(len(_IDS), kept)
+    comps = _uf_components(len(ids), kept)
     out = {}
     for c in comps:
-        names = [_IDS[int(n[1:])] for n in c]
+        names = [ids[int(n[1:])] for n in c]
         out.update({x: min(names) for x in names})
     return out
 
@@ -188,21 +150,24 @@ def no_broadcast(spark):
     return s
 
 
-@pytest.mark.parametrize("wide_ids", [False, True])
+@pytest.mark.parametrize("long_ids", [False, True])
 @settings(max_examples=6, deadline=None,
           suppress_health_check=[HealthCheck.function_scoped_fixture])
 @given(idx_edges=_ids_edges)
 def test_cc_by_hash_local_equals_spark(spark, no_broadcast, spark_cc_calls,
-                                       wide_ids, idx_edges):
+                                       long_ids, idx_edges):
+    """both paths give the union-find labels, on string ids and on int64
+    ids (the dedup and td_* graphs), each compared in its own type."""
+    ids, id_type = (_LONG_IDS, "long") if long_ids else (_IDS, "string")
     # duplicate and reversed copies of every edge, plus a self-loop
     idx = idx_edges + [(b, a) for a, b in idx_edges if a is not None]
     idx = idx + idx[:3] + [(1, 1)]
-    pairs = [(None if a is None else _IDS[a], _IDS[b]) for a, b in idx]
-    expect = _uf_labels(idx)
+    pairs = [(None if a is None else ids[a], ids[b]) for a, b in idx]
+    expect = _uf_labels(idx, ids)
     spark_cc_calls.clear()
-    assert _labels_by_hash(spark, pairs, wide_ids) == expect
+    assert _labels_by_hash(spark, pairs, id_type) == expect
     assert spark_cc_calls == [], "default session left the driver path"
-    assert _labels_by_hash(no_broadcast, pairs, wide_ids) == expect
+    assert _labels_by_hash(no_broadcast, pairs, id_type) == expect
     assert spark_cc_calls == [1], "disabled auto-broadcast kept the driver path"
 
 

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from zentity_spark import dialect as D, tdops
-from zentity_spark.operators.cluster import connected_components
+from zentity_spark.operators.cluster import _star_components
 from zentity_spark.operators.dedup import IncrementalDeduper
 
 BASE = ("alpha bravo charlie delta echo foxtrot golf hotel india juliet "
@@ -52,9 +52,29 @@ def test_fold_equals_batch(spark, tmp_path):
     groups = {r[0]: r[1] for r in d.groups().collect()}
     edges = spark.createDataFrame(
         [(a, b) for a, b in want], "doc_id_a long, doc_id_b long")
-    lab = {r[0]: r[1] for r in connected_components(edges).collect()}
+    lab = {r[0]: r[1] for r in _star_components(edges).collect()}
     assert groups == {i: lab.get(i, i) for i, _ in DOCS}
     assert groups[6] == 6 and groups[2] == 1
+
+
+def test_groups_label_on_the_driver_under_budget(spark, tmp_path,
+                                                spark_cc_calls):
+    """groups() labels through the one CC kernel: the driver union-find
+    in the default session, the Spark star loop with auto-broadcast
+    disabled — the same int64 groups either way."""
+    state = str(tmp_path / "state")
+    d = IncrementalDeduper(spark, state)
+    d.fold(_df(spark, DOCS[:3]))
+    d.fold(_df(spark, DOCS[3:]))
+    driver = {r[0]: r[1] for r in d.groups().collect()}
+    assert spark_cc_calls == [], "groups() left the driver path"
+    s = spark.newSession()
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    star = {r[0]: r[1] for r in
+            IncrementalDeduper(s, state).groups().collect()}
+    assert spark_cc_calls == [1], "disabled auto-broadcast kept the driver"
+    assert star == driver
+    assert driver[2] == driver[3] == 1 and driver[5] == 4 and driver[6] == 6
 
 
 def test_replayed_fold_converges(spark, tmp_path):

@@ -360,22 +360,6 @@ def test_stream_resolve_folds_backlog(spark, model, tmp_path):
     job.unpersist()
 
 
-def test_incremental_wide_cc_ids_identical_labels(spark, model, split,
-                                                  tmp_path):
-    """wide_cc_ids reaches the incremental fold (the 10¹²-doc operating
-    mode is exactly the one that needs the collision margin): bootstrap +
-    fold under 128-bit node ids produce the identical label map."""
-    base, delta = split
-    r = IncrementalResolver(spark, model, str(tmp_path / "st"),
-                            wide_cc_ids=True)
-    r.add(base)
-    r.add(delta)
-    job = ResolutionJob(spark, base.unionByName(delta), model)
-    batch = _labels(job.clusters())
-    job.unpersist()
-    assert _labels(r.clusters()) == batch
-
-
 # --- requests over a folded state ---
 
 def _sorted_rows(df):

@@ -73,7 +73,8 @@ def test_entry_smoke(spark):
 CLUSTER_QUERIES = ("er_clusters", "er_clusters_wide128", "er_cluster_sizes",
                    "er_increment_clusters", "er_scoped_clusters",
                    "er2_clusters", "er2_cluster_sizes",
-                   "er2_increment_clusters", "er2_scoped_clusters")
+                   "er2_increment_clusters", "er2_scoped_clusters",
+                   "td_dedup_groups", "td_embed_dedup_groups")
 
 
 @pytest.fixture(scope="module")
@@ -86,12 +87,14 @@ def test_cluster_query_spark_path_matches_oracle(spark, oracle, name,
                                                  spark_path_cache,
                                                  spark_cc_calls, monkeypatch):
     """the sf0.01 match graphs fit the driver budget, so the gate above
-    only runs the driver union-find.  With auto-broadcast disabled the
-    budget is 0 and connected_components_by_hash runs its hashed Spark
-    star loop (128-bit ids for er_clusters_wide128).  The stage cache is
-    this test's own, and its ``labels`` stages are dropped before each
-    query, so a warm label stage cannot answer without CC; the other
-    stages are shared by the queries of one job fingerprint."""
+    only runs the driver union-find (except er_clusters_wide128, which
+    disables auto-broadcast itself).  With auto-broadcast disabled the
+    budget is 0 and connected_components_by_hash runs its Spark star
+    loop, over string doc ids for the er_* queries and int64 ids for the
+    td_* dedup maps.  The stage cache is this test's own, and its
+    ``labels`` stages are dropped before each query, so a warm label
+    stage cannot answer without CC; the other stages are shared by the
+    queries of one job fingerprint."""
     for labels in spark_path_cache.glob("*/labels"):
         shutil.rmtree(labels)
     monkeypatch.setattr(entry_mod, "_STAGE_CACHE_BASE", str(spark_path_cache))

@@ -10,6 +10,7 @@ import shutil
 
 import pytest
 
+from tests.conftest import make_docs
 from zentity_spark.pipeline import ResolutionJob
 
 
@@ -153,14 +154,20 @@ def test_unpersist_keeps_user_checkpoint_dir(spark, docs_sf0001, model, ckpt):
     assert os.path.exists(os.path.join(stages, "labels"))
 
 
-def test_fingerprint_covers_wide_cc_ids(spark):
-    """a checkpoint written under one CC id-width must not serve a resume
-    under the other: the flag is part of the job fingerprint."""
-    from zentity_spark.model import Model
-    from zentity_spark.pipeline import ResolutionJob
-    docs = spark.read.parquet("fixtures/sf0.001/docs_spans.parquet")
-    model = Model.parse(open("fixtures/model_person.json").read())
-    narrow = ResolutionJob(spark, docs, model).fingerprint()
-    wide = ResolutionJob(spark, docs, model,
-                         wide_cc_ids=True).fingerprint()
-    assert narrow != wide
+def test_in_memory_docs_open_their_own_dir(spark, model, tmp_path):
+    """in-memory docs have no input files; their plan identifies them, so
+    two different one-doc frames over one base open different dirs and
+    each job reads only its own doc, while one frame opened twice keeps
+    one dir."""
+    base = str(tmp_path / "stages")
+    a = make_docs(spark, [("a-000001", [("full_name", "Alicia Keys")])])
+    b = make_docs(spark, [("b-000001", [("full_name", "Carol Chan")])])
+    assert a.inputFiles() == b.inputFiles() == []
+    ja, jb = (_cached(spark, d, model, base) for d in (a, b))
+    assert ja._ckpt_dir != jb._ckpt_dir
+    assert _cached(spark, a, model, base)._ckpt_dir == ja._ckpt_dir
+    for job, doc in ((ja, "a-000001"), (jb, "b-000001")):
+        assert _labels(job.clusters()) == [(doc, doc)]
+        assert [r[0] for r in job.stage(
+            "SELECT DISTINCT doc_id FROM attrs_x",
+            upto="attrs_x").collect()] == [doc]

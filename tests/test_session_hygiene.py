@@ -1,8 +1,9 @@
 """Session hygiene of the iterative operators (VERDICT r2 wrong #1-2):
 
-  * ``connected_components`` must not mutate the caller session's conf —
-    its loop-local partition sizing / AQE toggle live in a dedicated child
-    session, so concurrent jobs on the shared session keep their plans;
+  * the CC star loop (``_star_components``) must not mutate the caller
+    session's conf — its loop-local partition sizing / AQE toggle live in
+    a dedicated child session, so concurrent jobs on the shared session
+    keep their plans;
   * ``bounded_label_propagation`` must broadcast a small frontier into the
     hop join (BroadcastHashJoin in the hop plan, no per-hop edge shuffle).
 """
@@ -14,8 +15,8 @@ from pyspark.sql import functions as F
 
 from zentity_spark.operators import cluster
 from zentity_spark.operators.cluster import (
+    _star_components,
     bounded_label_propagation,
-    connected_components,
 )
 
 
@@ -41,7 +42,7 @@ def test_cc_does_not_mutate_session_conf(spark):
     t = threading.Thread(target=poll)
     t.start()
     try:
-        labels = connected_components(_chain_edges(spark))
+        labels = _star_components(_chain_edges(spark))
         assert labels.count() == 4000
     finally:
         stop.set()
@@ -54,7 +55,7 @@ def test_cc_does_not_mutate_session_conf(spark):
 
 def test_cc_result_composes_with_caller_session(spark):
     """the labels DataFrame must join cleanly with caller-session frames."""
-    labels = connected_components(_chain_edges(spark, 50))
+    labels = _star_components(_chain_edges(spark, 50))
     docs = spark.range(50).select(
         F.format_string("n-%07d", "id").alias("doc_id"))
     joined = docs.join(labels, "doc_id", "left")
@@ -62,19 +63,29 @@ def test_cc_result_composes_with_caller_session(spark):
     assert joined.where(F.col("entity_id") == "n-0000000").count() == 50
 
 
-def test_lp_broadcasts_small_frontier(spark):
+def _hop_plans(monkeypatch):
+    """spy on ``cluster._checkpoint_id_stats``: the executed plan of every
+    hop frame it checkpoints (the first call is the seeds, not a hop)."""
+    plans, calls = [], []
+    real = cluster._checkpoint_id_stats
+
+    def spy(df, *a, **k):
+        calls.append(1)
+        if len(calls) > 1:
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df, *a, **k)
+    monkeypatch.setattr(cluster, "_checkpoint_id_stats", spy)
+    return plans
+
+
+def test_lp_broadcasts_small_frontier(spark, monkeypatch):
     """every hop of a seeded propagation with a tiny frontier runs as a
     broadcast join of the frontier against the checkpointed edge list."""
     edges = _chain_edges(spark, 64)
     seeds = spark.createDataFrame([("n-0000000",)], "doc_id string")
-    cluster._LAST_HOP_PLANS.clear()
-    cluster._PLAN_AUDIT = True
-    try:
-        out = bounded_label_propagation(edges, seeds, max_hops=3)
-        assert out.count() == 4  # seed + 3 hops down the chain
-    finally:
-        cluster._PLAN_AUDIT = False
-    plans = cluster._LAST_HOP_PLANS
+    plans = _hop_plans(monkeypatch)
+    out = bounded_label_propagation(edges, seeds, max_hops=3)
+    assert out.count() == 4  # seed + 3 hops down the chain
     assert plans, "no hop plans captured"
     for p in plans:
         assert "BroadcastHashJoin" in p, f"hop not broadcast:\n{p[:2000]}"
@@ -96,21 +107,16 @@ def test_broadcast_row_budget_is_byte_based(spark):
     assert cluster.broadcast_row_budget(s, 8.0) == 0
 
 
-def test_lp_oversized_frontier_falls_back_to_shuffle(spark):
+def test_lp_oversized_frontier_falls_back_to_shuffle(spark, monkeypatch):
     """with auto-broadcast disabled the budget is 0, so every hop must run
     WITHOUT a frontier broadcast (the shuffle-join fallback path)."""
     s = spark.newSession()
     s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     edges = _chain_edges(s, 64)
     seeds = s.createDataFrame([("n-0000000",)], "doc_id string")
-    cluster._LAST_HOP_PLANS.clear()
-    cluster._PLAN_AUDIT = True
-    try:
-        out = bounded_label_propagation(edges, seeds, max_hops=3)
-        assert out.count() == 4
-    finally:
-        cluster._PLAN_AUDIT = False
-    plans = cluster._LAST_HOP_PLANS
+    plans = _hop_plans(monkeypatch)
+    out = bounded_label_propagation(edges, seeds, max_hops=3)
+    assert out.count() == 4
     assert plans, "no hop plans captured"
     for p in plans:
         assert "BroadcastHashJoin" not in p, \

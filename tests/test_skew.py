@@ -37,8 +37,10 @@ def _skew_docs(spark):
     return make_docs(spark, spec)
 
 
-def _job(spark, block_cap=100000, salt_min=16):
-    job = ResolutionJob(spark, _skew_docs(spark), Model.parse(HOT_MODEL),
+def _job(spark, block_cap=100000, salt_min=16, docs=None):
+    if docs is None:
+        docs = _skew_docs(spark)
+    job = ResolutionJob(spark, docs, Model.parse(HOT_MODEL),
                         scope=Scope(), block_cap=block_cap)
     job.plan.salt_min = salt_min       # force the hot path at test scale
     job.plan.salt_cells = 4
@@ -190,18 +192,20 @@ def test_skew_statistic_persisted_in_stage_dir(spark, tmp_path):
     import json
     import os
     base = str(tmp_path / "stages")
-    job = _job(spark, salt_min=16).cache_stages_under(base)
+    # one docs frame: an in-memory frame's plan is its stage-dir identity
+    docs = _skew_docs(spark)
+    job = _job(spark, salt_min=16, docs=docs).cache_stages_under(base)
     job.materialize()
     path = os.path.join(job._ckpt_dir, "key_blocks.json")
     with open(path) as f:
         assert json.load(f) == {"acct": N_HOT}
     with open(path, "w") as f:
         json.dump({"acct": 1}, f)
-    cold = _job(spark, salt_min=16).cache_stages_under(base)
+    cold = _job(spark, salt_min=16, docs=docs).cache_stages_under(base)
     cold.materialize()
     assert cold.plan.skew_policy == {"r": False}
     with open(path, "w") as f:
         json.dump({"acct": N_HOT}, f)
-    high = _job(spark, salt_min=100000).cache_stages_under(base)
+    high = _job(spark, salt_min=100000, docs=docs).cache_stages_under(base)
     high.materialize()
     assert high.plan.skew_policy == {"r": False}

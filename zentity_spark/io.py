@@ -127,10 +127,12 @@ class FoldState:
       ``base_inc <= inc <= fold_id``, so incs of a fold that crashed
       before its rename are invisible.
     * ``identity`` digests what the rows were computed under (the
-      subclass's model and parameters, not its compaction policy):
-      opening a state committed under another identity raises, so Δ rows
-      of a new model never join rows of the old one.  A pointer without
-      one is accepted and gains it at the next commit.
+      subclass's model and parameters, not its compaction policy —
+      resolver: model, scope, ``block_cap``; dedup: ``k``, ``bands``,
+      ``shingle_w``, ``tau``): opening a state committed under another
+      identity raises, so Δ rows of a new model never join rows of the
+      old one.  A pointer without one is accepted and gains it at the
+      next commit.
     * Ratio-gated compaction bounds read amplification, LSM-style: a
       compacting fold writes the full current view of each ``COMPACTED``
       stage into its own inc and becomes the new base; the older incs

@@ -1,6 +1,6 @@
 from zentity_spark.operators.cluster import (
     bounded_label_propagation,
-    connected_components,
+    connected_components_by_hash,
 )
 
-__all__ = ["connected_components", "bounded_label_propagation"]
+__all__ = ["connected_components_by_hash", "bounded_label_propagation"]

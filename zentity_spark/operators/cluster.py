@@ -11,12 +11,15 @@ and Beyond", SoCC'14 — O(log² n) rounds, shuffle-bounded, skew-tolerant),
 and the seeded ``max_hops`` mode is bounded label propagation (BFS rounds)
 from the seed docs.
 
-A match graph small enough to broadcast (the session's own
-``autoBroadcastJoinThreshold``, see ``broadcast_row_budget``) is labelled
-on the driver: one Arrow collect of its edge rows and a union-find
-(``_components_local``) — at fold scale the Spark loop is almost all
-per-job fixed cost.  Larger graphs run the star loop, where each
-iteration is one Catalyst job with ``localCheckpoint()`` to truncate
+``connected_components_by_hash`` is the one CC entry; every caller (the
+batch ``labels`` stage, the resolver and dedup folds, the ``td_*`` dedup
+queries) goes through it.  A match graph small enough to broadcast (the
+session's own ``autoBroadcastJoinThreshold``, see
+``broadcast_row_budget``) is labelled on the driver: one Arrow collect of
+its edge rows and a union-find (``_components_local``) — at fold scale
+the Spark loop is almost all per-job fixed cost.  Larger graphs run the
+star loop (``_star_components``) over the doc ids as they are, where
+each iteration is one Catalyst job with ``localCheckpoint()`` to truncate
 lineage (resume-friendly, no stack-depth blowup); the seeded BFS always
 runs on DataFrames.
 """
@@ -28,10 +31,9 @@ import uuid
 import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
-# debug/test hook: when True, per-hop executed plans of the seeded label
-# propagation are appended here (tests assert the frontier broadcast)
-_PLAN_AUDIT = False
-_LAST_HOP_PLANS: list = []
+# star rounds before the loop gives up on convergence (O(log² n) rounds
+# suffice for any graph that fits a cluster)
+_MAX_STAR_ROUNDS = 50
 
 # estimated broadcast footprint per row beyond the key string itself:
 # UnsafeRow field slots + BytesToBytesMap bucket/pointer slack
@@ -101,7 +103,9 @@ def _rebind(df: DataFrame, session) -> DataFrame:
 
 
 def _canon(edges: DataFrame) -> DataFrame:
-    """undirected edge list → canonical (u < v), deduped, no self-loops."""
+    """undirected edge list → canonical (u < v), deduped, no self-loops.
+    A row with a null end is dropped too: least/greatest skip nulls, so
+    its u equals its v (or both are null)."""
     e = edges.select(
         F.least("doc_id_a", "doc_id_b").alias("u"),
         F.greatest("doc_id_a", "doc_id_b").alias("v"),
@@ -154,13 +158,16 @@ def _checksum(e: DataFrame):
     return (row["n"], row["h"])
 
 
-def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
-    """edges(doc_id_a, doc_id_b) → labels(doc_id, entity_id).
+def _star_components(edges: DataFrame) -> DataFrame:
+    """the Spark path of ``connected_components_by_hash``: edges(doc_id_a,
+    doc_id_b) → labels(doc_id, entity_id), by the star loop over the ids
+    as they are.
 
     entity_id is the minimum doc_id of the component under the id type's
-    ordering (for strings: lexicographic — matches the DuckDB recursive-CTE
-    oracle).  Docs with no edges are absent from the output — callers attach
-    singletons with a left join.
+    ordering (for strings: UTF-8 byte order — matches the DuckDB
+    recursive-CTE oracle).  Docs with no edges are absent from the output —
+    callers attach singletons with a left join.  Rows with a null end are
+    dropped by ``_canon``.
 
     The round loop runs in a DEDICATED child session (``newSession()`` —
     same SparkContext, isolated conf): its ``spark.sql.shuffle.partitions``
@@ -183,7 +190,7 @@ def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     cc.conf.set("spark.sql.adaptive.enabled", "false")
     e = _rebind(e, cc)
     prev = None
-    for _ in range(max_iter):
+    for _ in range(_MAX_STAR_ROUNDS):
         # one checkpoint per round: large→small star fused into a single
         # materialization (each localCheckpoint is an eager Spark job —
         # per-round fixed cost matters more than lineage depth of 2).
@@ -259,64 +266,20 @@ def _components_local(edges: DataFrame) -> DataFrame | None:
         "entity_id": pa.array([find(x) for x in ids], id_type)}))
 
 
-def connected_components_by_hash(edges: DataFrame,
-                                 max_iter: int = 50,
-                                 wide_ids: bool = False) -> DataFrame:
+def connected_components_by_hash(edges: DataFrame) -> DataFrame:
     """edges(doc_id_a, doc_id_b) → labels(doc_id, entity_id = min doc_id
-    string of the component).
+    of the component), the package's one connected-components entry.
 
     A graph under the driver budget is labelled by ``_components_local``;
-    its ids are compared as strings, so there is nothing to hash or widen.
-    Past the budget the star loop runs over hashed node ids and the
-    canonical labels are restored afterwards.
-
-    The star rounds shuffle 8-byte longs instead of doc-id strings — the
-    single-socket scaling ceiling here is memory bandwidth on string-heavy
-    shuffles (BENCH/BASELINE.md), and CC is the most shuffle-round-heavy
-    stage.  The component label under hashed ids is an arbitrary-but-
-    consistent member; one groupBy(min doc_id) + join restores the
-    canonical lexicographic label the oracle expects.
-
-    xxhash64 collisions would merge two docs (p ≈ n²/2⁶⁵ — negligible at
-    sandbox scale, real at 10¹² docs).  ``wide_ids=True`` widens node ids
-    to 128 bits: a struct of two independently-seeded xxhash64 columns
-    (a merge then needs BOTH to collide, p ≈ n²/2¹²⁹ — comfortable at
-    10¹²).  The salt column must come FIRST: Spark's multi-arg xxhash64
-    chains the running hash as the seed of the next argument, so
-    ``xxhash64(c, 1)`` is a pure function of ``xxhash64(c)`` (h1
-    collisions would imply h2 collisions — zero added resistance);
-    ``xxhash64(1, c)`` hashes ``c`` under a different effective seed, so
-    the two columns collide independently.  The star rounds are
-    id-type-agnostic (least/greatest/min/groupBy order structs
-    field-wise), so the same loop runs over 16-byte struct ids at ~2×
-    shuffle width; labels are pinned identical across modes by
-    tests/test_cluster.py."""
+    past it the star loop (``_star_components``) runs over the doc ids as
+    they are.  Both paths compare ids in their own type (strings by UTF-8
+    bytes, longs by value), so two docs never collide and the labels are
+    the same on either path.  The name is kept for the ``cluster.cc``
+    span that erbench hooks by it."""
     local = _components_local(edges)
     if local is not None:
         return local
-    # checkpoint: the loop consumes the edge relation twice (hashed CC
-    # input + the nodes/label-restore join) — one pass over the input.
-    # dropna: xxhash64(NULL) is the seed, not NULL, so a null end would
-    # join every doc it touches into one component
-    edges = edges.select("doc_id_a", "doc_id_b").dropna().localCheckpoint()
-    if wide_ids:
-        h = lambda c: F.struct(
-            F.expr(f"xxhash64({c})").alias("h1"),
-            F.expr(f"xxhash64(1, {c})").alias("h2"))
-    else:
-        h = lambda c: F.expr(f"xxhash64({c})")
-    ie = edges.select(h("doc_id_a").alias("doc_id_a"),
-                      h("doc_id_b").alias("doc_id_b"))
-    labels_h = connected_components(ie, max_iter=max_iter)
-    nodes = (edges.select(F.col("doc_id_a").alias("doc_id"))
-             .union(edges.select("doc_id_b"))
-             .distinct()
-             .withColumn("hid", h("doc_id")))
-    member = labels_h.join(
-        nodes, labels_h.doc_id == nodes.hid
-    ).select(nodes.doc_id, F.col("entity_id").alias("comp"))
-    canon = member.groupBy("comp").agg(F.min("doc_id").alias("entity_id"))
-    return member.join(canon, "comp").select("doc_id", "entity_id")
+    return _star_components(edges)
 
 
 def bounded_label_propagation(edges: DataFrame, seeds: DataFrame,
@@ -384,9 +347,6 @@ def bounded_label_propagation(edges: DataFrame, seeds: DataFrame,
             .withColumn("hop", F.lit(h))
             .select("doc_id", "hop", "q")
         )
-        if _PLAN_AUDIT:
-            _LAST_HOP_PLANS.append(
-                nxt._jdf.queryExecution().executedPlan().toString())
         nxt, n_frontier, id_w = _checkpoint_id_stats(nxt)
         if n_frontier == 0:
             break

@@ -51,7 +51,7 @@ from zentity_spark import dialect as D
 from zentity_spark import tdops
 from zentity_spark.io import FoldState, Storage
 from zentity_spark.operators.cluster import (broadcast_row_budget,
-                                             connected_components)
+                                             connected_components_by_hash)
 
 # conservative per-row width of a (doc_id, band, band_key) probe row for
 # byte-gating the Δ-band broadcast
@@ -243,7 +243,7 @@ class IncrementalDeduper(FoldState):
     def groups(self) -> DataFrame:
         """(doc_id, canonical_id) keep-one map over ALL ingested docs —
         the incremental twin of the td_dedup_groups driver query."""
-        labels = connected_components(
+        labels = connected_components_by_hash(
             self.pairs().select("doc_id_a", "doc_id_b"))
         docs = self._read_committed("docs").select("doc_id")
         return docs.join(labels, "doc_id", "left").select(

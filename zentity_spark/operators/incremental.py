@@ -74,8 +74,7 @@ every other inc above the commit (the orphan's partial stage,
 state.  A fold that already committed is refused here and skipped by
 the stream caller via ``committed_fold_id()`` (streaming/resolve.py).
 The ``CURRENT`` pointer records the fold identity (model, scope,
-``block_cap``, ``wide_cc_ids``): reopening a state under another one
-raises.
+``block_cap``): reopening a state under another one raises.
 """
 
 from __future__ import annotations
@@ -113,21 +112,15 @@ class IncrementalResolver(FoldState):
     def __init__(self, spark: SparkSession, model: Model, state_dir: str,
                  scope: Scope | None = None, block_cap: int = 1000,
                  storage: Storage | None = None,
-                 auto_compact_ratio: float = 4.0,
-                 wide_cc_ids: bool = False):
+                 auto_compact_ratio: float = 4.0):
         scope = scope if scope is not None else DEFAULT_SCOPE
         super().__init__(
             spark, state_dir,
-            "|".join([model.to_json(), repr(scope), str(block_cap),
-                      f"wide_cc={wide_cc_ids}"]),
+            "|".join([model.to_json(), repr(scope), str(block_cap)]),
             storage, auto_compact_ratio)
         self.model = model
         self.scope = scope
         self.block_cap = block_cap
-        # 128-bit CC node ids — the incremental fold IS the 10¹²-doc
-        # operating mode, so the collision-margin flag must be reachable
-        # here, not only on the batch job (see connected_components_by_hash)
-        self.wide_cc_ids = wide_cc_ids
         # observability for tests/operators: executed plan of the last Δ
         # pair job (asserts the broadcast), the last fold run
         self.last_pairs_plan: str | None = None
@@ -179,8 +172,7 @@ class IncrementalResolver(FoldState):
         job = ResolutionJob(self.spark,
                             self._read_range("docs", 0, hi)
                             .select("doc_id", "spans"),
-                            self.model, self.scope, self.block_cap,
-                            wide_cc_ids=self.wide_cc_ids)
+                            self.model, self.scope, self.block_cap)
         self._point(job, self._stages(job) + (ResolutionJob.EDGE_STAGE,), hi)
         return job
 
@@ -365,9 +357,8 @@ class IncrementalResolver(FoldState):
                         .select(F.col("doc_id").alias("doc_id_a"),
                                 F.col("entity_id").alias("doc_id_b")))
                 d_edges = star.union(d_edges)
-            relabeled = connected_components_by_hash(
-                d_edges, wide_ids=self.wide_cc_ids).select(
-                    "doc_id", "entity_id").localCheckpoint()
+            relabeled = connected_components_by_hash(d_edges).select(
+                "doc_id", "entity_id").localCheckpoint()
             held.append(relabeled)
             return self._commit_labels(relabeled, fold_id)
         finally:

@@ -45,13 +45,9 @@ class ResolutionJob:
 
     def __init__(self, spark: SparkSession, docs: DataFrame, model: Model,
                  scope: Scope | None = None, block_cap: int = 1000,
-                 storage: "Storage | None" = None,
-                 wide_cc_ids: bool = False):
+                 storage: "Storage | None" = None):
         self.spark = spark
         self.docs = docs
-        # 128-bit CC node ids for 10¹²-doc deployments (labels identical
-        # by test; ~2× CC shuffle width) — see connected_components_by_hash
-        self.wide_cc_ids = wide_cc_ids
         self.storage = storage if storage is not None else Storage(spark)
         self._ckpt_dir: str | None = None
         self._owns_ckpt_dir = False
@@ -226,8 +222,7 @@ class ResolutionJob:
         if st == self.LABEL_STAGE:
             return connected_components_by_hash(
                 self.stage("SELECT doc_id_a, doc_id_b FROM match_edges_x",
-                           upto="match_edges_x"),
-                wide_ids=self.wide_cc_ids)
+                           upto="match_edges_x"))
         return self.stage(f"SELECT * FROM {st}", upto=st)
 
     def _edge_stage(self) -> None:
@@ -270,15 +265,18 @@ class ResolutionJob:
     def fingerprint(self) -> str:
         """identity of (model, scope, block_cap, input files): it names the
         ``cache_stages_under`` dir, so stages written under one identity
-        are never read under another."""
+        are never read under another.  A docs frame with no input files
+        (built in memory) is identified by its plan's ``semanticHash()``
+        instead: two in-memory corpora never share a dir, and since such
+        a frame cannot be reopened by another process, an identity that
+        holds within this process loses nothing."""
         import hashlib
-        files = ";".join(sorted(self.docs.inputFiles()))
+        files = self.docs.inputFiles()
+        docs_id = (";".join(sorted(files)) if files
+                   else f"plan:{self.docs.semanticHash()}")
         body = "|".join([
             self.plan.model.to_json(), repr(self.plan.scope),
-            str(self.plan.block_cap), files,
-            # id-width mode changes cluster labels' collision identity:
-            # narrow-mode labels must not serve a wide-mode job
-            f"wide_cc={self.wide_cc_ids}"])
+            str(self.plan.block_cap), docs_id])
         return hashlib.md5(body.encode()).hexdigest()
 
     # ---------- stage writes (SURVEY §5.3 resume/lineage, M7) ----------

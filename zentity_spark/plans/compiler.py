@@ -1266,9 +1266,6 @@ class CompiledPlan:
 
 
 def compile_model(model: Model, scope: Scope | None = None,
-                  block_cap: int = DEFAULT_BLOCK_CAP,
-                  salt_min: int = 256, salt_cells: int = 8,
-                  presalt_cells: int = 32) -> CompiledPlan:
+                  block_cap: int = DEFAULT_BLOCK_CAP) -> CompiledPlan:
     return CompiledPlan(model=model, scope=scope or Scope(),
-                        block_cap=block_cap, salt_min=salt_min,
-                        salt_cells=salt_cells, presalt_cells=presalt_cells)
+                        block_cap=block_cap)
